@@ -20,8 +20,11 @@ queries value-check; the CLI only wires them together.
 
 Node ids are xxhash64(url) (host ids xxhash64(host)) — deterministic,
 join-free, collision odds ~n²/2^64; the urlmap/ (and hostmap/) outputs
-carry the id↔string mapping so every report is joinable back. PageRank
-output can feed scripts/crawl.py --rank-table after an id→url join.
+carry the id↔string mapping for the crawled pages and their hosts. The
+spam report's host ids (``top_dst`` included) also name external
+link-target hosts that no crawled page lives on, and hostmap/ has no row
+for those. PageRank output can feed scripts/crawl.py --rank-table after
+an id→url join.
 """
 
 from __future__ import annotations

@@ -378,33 +378,46 @@ def test_age_boost_zero_emits_identical_oracle_sql():
 
 
 def test_age_boost_zero_scheduler_matches_plain(spark):
-    # age_boost=0 must be bit-identical to the pre-aging scheduler
-    from geospatial_web_scraper_spark import corpus
-    from geospatial_web_scraper_spark.operators.politeness import (
-        PolitenessScheduler,
+    # an explicit age_boost=0 in the crawl_deferral_trace configuration
+    # must run the plain deferral crawl: the trace equals that row's
+    # DuckDB oracle, and no _wait column reaches any round's frontier,
+    # the deferred set or the trace
+    import duckdb
+
+    from geospatial_web_scraper_spark.entry_queries import ORACLES
+
+    seen_cols = []
+
+    class Recording(PolitenessScheduler):
+        def apply(self, df, rnd):
+            seen_cols.append(df.columns)
+            out = super().apply(df, rnd)
+            if self.deferred is not None:
+                seen_cols.append(self.deferred.columns)
+            return out
+
+    sched = Recording(
+        default_tokens_per_round=2,
+        defer_overflow=True,
+        tiebreak="url",
+        age_boost=0,
     )
-    from geospatial_web_scraper_spark.plans.bfs import CrawlEngine
+    eng = CrawlEngine(
+        spark, corpus.corpus_df(spark, 300), max_crawl=120,
+        lineage_detail=False, scheduler=sched,
+    )
+    run = eng.run(corpus.seeds_df(spark, 300))
+    cols = ["seq", "url", "depth", "parent_url", "round"]
+    got = sorted(tuple(r) for r in run.trace.select(*cols).collect())
 
-    def _trace(boost):
-        sched = PolitenessScheduler(
-            default_tokens_per_round=2,
-            defer_overflow=True,
-            tiebreak="url",
-            age_boost=boost,
-        )
-        eng = CrawlEngine(
-            spark, corpus.corpus_df(spark, 300), max_crawl=60,
-            lineage_detail=False, scheduler=sched,
-        )
-        run = eng.run(corpus.seeds_df(spark, 300))
-        return [
-            tuple(r)
-            for r in run.trace.select("seq", "url", "round")
-            .orderBy("seq")
-            .collect()
-        ]
-
-    assert _trace(0) == _trace(None or 0)
+    res = duckdb.connect().execute(ORACLES["crawl_deferral_trace"])
+    names = [d[0] for d in res.description]
+    want = sorted(
+        tuple(row[names.index(c)] for c in cols) for row in res.fetchall()
+    )
+    assert got == want
+    assert seen_cols and all("_wait" not in c for c in seen_cols)
+    assert "_wait" not in run.trace.columns
 
 
 def test_aging_admits_starved_urls_earlier(spark):
