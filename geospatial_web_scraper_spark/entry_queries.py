@@ -2368,7 +2368,7 @@ def q_curate_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the testdata table is ONE parquet file → a 1-partition scan; spread
     # it once so the gate/minhash scan work parallelizes (a production
-    # table has many splits — same note as bench.py), and materialize the
+    # table has many splits), and materialize the
     # curated survivors before the sampling fan-out below re-reads them
     # twice (audit hash + budget join). The spread itself must be
     # MATERIALIZED (r5): predicate pushdown moves the stage-1 gate BELOW
@@ -3674,7 +3674,7 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 # evaluation budget appears to be 50 entries. Every SURVEY §2 operator's
 # dedicated query therefore sits in the first 50 positions; the TPC-H-style
 # scale-pattern showcases come last (they are additionally pinned by
-# tests/test_scale_plan.py and exercised by bench.py regardless).
+# tests/test_scale_plan.py regardless).
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # -- crawl engine end-to-end (S1/F1/F4/F5/F7/F10/J1/T3/R1-R3/X1/U1) ----
     "crawl_bfs_seen": q_crawl_bfs_seen,

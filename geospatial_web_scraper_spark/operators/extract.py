@@ -181,15 +181,6 @@ def extract_meta_with_feeds(pages, feeds, html_col: str = "html",
     return withf.mapInPandas(gen, FEED_META_TYPE)
 
 
-def exploded_links(df, html_col: str = "html", url_col: str = "url") -> "Column":
-    """Convenience: page rows → (page cols…, pos, link struct) rows."""
-    withl = df.withColumn("_links", extract_links_udf(F.col(html_col), F.col(url_col)))
-    return withl.select(
-        *[c for c in df.columns if c != html_col],
-        F.posexplode_outer("_links").alias("pos_in_doc", "link"),
-    )
-
-
 def extract_links_flat(
     df, carry_cols: list[str], html_col: str = "html", url_col: str = "url"
 ):
@@ -275,9 +266,12 @@ def extract_round_outputs(fetched, geo_mime_types, max_depth: int,
     efficiency is most sensitive to.
 
     With ``collect_text=True`` metadata extraction (X2) is folded into the
-    SAME pass as ``kind=2`` rows — one scan per round in every engine
-    configuration except the offline-feeds variant (C10), which joins the
-    xml_docs table and keeps its own pass. The fused pass does ship HTML
+    SAME pass as ``kind=2`` rows. This pass is the round's only extraction
+    scan of the fetched slice, but not always its only scan: the
+    offline-feeds variant (C10) joins the xml_docs table and keeps its own
+    pass, and with ``lineage_detail`` on the engine runs the fetch join a
+    second time for its per-partition pages/bytes ``groupBy``. The fused
+    pass does ship HTML
     through the Arrow worker for rows that only become kind=0 download
     rows (the pre-fusion downloads branch was column-pruned off html) —
     that small Arrow transfer buys removing whole extra source scans,

@@ -34,65 +34,49 @@ from pyspark.sql import functions as F
 from ..functions.urls import url_hash
 
 
-class ShardedBloomSeenFilter:
-    def __init__(
-        self,
-        spark: SparkSession,
-        n_shards: int = 16,
-        bits_per_shard: int = 1 << 20,  # 128 KiB/shard default
-        n_hashes: int = 5,
-    ):
+class _ShardedSeenFilter:
+    """The engine contract shared by both filters: ``split`` probes every
+    candidate once against the broadcast shard state and persists the
+    result, ``release`` drops that cache, and ``update`` folds URLs into
+    the shards. Subclasses supply the bit math: ``_probe_state`` (what to
+    broadcast), ``_prober`` (state × uint64 hashes → maybe-seen mask) and
+    the per-shard ``update``."""
+
+    def __init__(self, spark: SparkSession, n_shards: int):
         if n_shards & (n_shards - 1):
             # probe side uses unsigned mod, build side signed pmod; they agree
             # exactly when n_shards divides 2^64
             raise ValueError("n_shards must be a power of two")
-        if bits_per_shard % 8:
-            raise ValueError("bits_per_shard must be a multiple of 8")
         self.spark = spark
         self.n_shards = n_shards
-        self.m_bits = bits_per_shard
-        self.k = n_hashes
-        self.bitmaps = np.zeros((n_shards, bits_per_shard // 8), dtype=np.uint8)
         self._bc = None
         self._probed: DataFrame | None = None
 
-    # ------------------------------------------------------------- internals
-    @staticmethod
-    def _positions(hashes: np.ndarray, k: int, m_bits: int) -> np.ndarray:
-        """(n,) uint64 → (k, n) bit positions via double hashing."""
-        h1 = hashes >> np.uint64(32)
-        h2 = hashes & np.uint64(0xFFFFFFFF)
-        return np.stack(
-            [(h1 + np.uint64(i) * h2) % np.uint64(m_bits) for i in range(k)]
+    def _per_shard(self, urls: DataFrame, url_col: str, build, schema: str):
+        """Run ``build`` once per shard over that shard's url hashes
+        (columns ``_h``, ``_shard``); returns its collected rows."""
+        return (
+            urls.select(url_hash(F.col(url_col)).alias("_h"))
+            .withColumn("_shard", F.pmod(F.col("_h"), F.lit(self.n_shards)))
+            .groupBy("_shard")
+            .applyInPandas(build, schema)
+            .collect()
         )
 
-    def _broadcast(self):
-        if self._bc is not None:
-            self._bc.unpersist()
-        self._bc = self.spark.sparkContext.broadcast(self.bitmaps)
-        return self._bc
-
-    # ------------------------------------------------------------------ API
     def split(self, df: DataFrame, url_col: str = "url") -> tuple[DataFrame, DataFrame]:
         """→ (definitely_new, maybe_seen). Zero false negatives by
         construction; maybe_seen must still pass the exact anti-join."""
-        bc = self._broadcast()
-        S, m_bits, k = self.n_shards, self.m_bits, self.k
+        if self._bc is not None:
+            self._bc.unpersist()
+        self._bc = bc = self.spark.sparkContext.broadcast(self._probe_state())
+        probe = self._prober()
 
         @F.pandas_udf("boolean")
         def maybe_seen(h: pd.Series) -> pd.Series:
-            bitmaps = bc.value
             v = h.to_numpy(dtype=np.int64).view(np.uint64)
             if len(v) == 0:
                 return pd.Series([], dtype=bool)
-            shard = (v % np.uint64(S)).astype(np.int64)
-            pos = ShardedBloomSeenFilter._positions(v, k, m_bits)
-            res = np.ones(len(v), dtype=bool)
-            for i in range(k):
-                byte = (pos[i] >> np.uint64(3)).astype(np.int64)
-                bit = (pos[i] & np.uint64(7)).astype(np.uint8)
-                res &= ((bitmaps[shard, byte] >> bit) & 1).astype(bool)
-            return pd.Series(res)
+            return pd.Series(probe(bc.value, v))
 
         # the persist exists so the double filter below probes each row once;
         # releasing the PREVIOUS round's probed cache here (and in
@@ -119,10 +103,55 @@ class ShardedBloomSeenFilter:
             self._probed.unpersist()
             self._probed = None
 
+
+class ShardedBloomSeenFilter(_ShardedSeenFilter):
+    def __init__(
+        self,
+        spark: SparkSession,
+        n_shards: int = 16,
+        bits_per_shard: int = 1 << 20,  # 128 KiB/shard default
+        n_hashes: int = 5,
+    ):
+        super().__init__(spark, n_shards)
+        if bits_per_shard % 8:
+            raise ValueError("bits_per_shard must be a multiple of 8")
+        self.m_bits = bits_per_shard
+        self.k = n_hashes
+        self.bitmaps = np.zeros((n_shards, bits_per_shard // 8), dtype=np.uint8)
+
+    # ------------------------------------------------------------- internals
+    @staticmethod
+    def _positions(hashes: np.ndarray, k: int, m_bits: int) -> np.ndarray:
+        """(n,) uint64 → (k, n) bit positions via double hashing."""
+        h1 = hashes >> np.uint64(32)
+        h2 = hashes & np.uint64(0xFFFFFFFF)
+        return np.stack(
+            [(h1 + np.uint64(i) * h2) % np.uint64(m_bits) for i in range(k)]
+        )
+
+    def _probe_state(self):
+        return self.bitmaps
+
+    def _prober(self):
+        S, m_bits, k = self.n_shards, self.m_bits, self.k
+
+        def probe(bitmaps: np.ndarray, v: np.ndarray) -> np.ndarray:
+            shard = (v % np.uint64(S)).astype(np.int64)
+            pos = ShardedBloomSeenFilter._positions(v, k, m_bits)
+            res = np.ones(len(v), dtype=bool)
+            for i in range(k):
+                byte = (pos[i] >> np.uint64(3)).astype(np.int64)
+                bit = (pos[i] & np.uint64(7)).astype(np.uint8)
+                res &= ((bitmaps[shard, byte] >> bit) & 1).astype(bool)
+            return res
+
+        return probe
+
+    # ------------------------------------------------------------------ API
     def update(self, urls: DataFrame, url_col: str = "url") -> None:
         """Fold newly-recorded URLs into the shard bitmaps — built
         distributively, merged driver-side (S small rows, not S×rows)."""
-        S, m_bits, k = self.n_shards, self.m_bits, self.k
+        m_bits, k = self.m_bits, self.k
 
         def build(pdf: pd.DataFrame) -> pd.DataFrame:
             local = np.zeros(m_bits // 8, dtype=np.uint8)
@@ -136,14 +165,7 @@ class ShardedBloomSeenFilter:
                 {"shard": [int(pdf["_shard"].iloc[0])], "bitmap": [local.tobytes()]}
             )
 
-        parts = (
-            urls.select(url_hash(F.col(url_col)).alias("_h"))
-            .withColumn("_shard", F.pmod(F.col("_h"), F.lit(S)))
-            .groupBy("_shard")
-            .applyInPandas(build, "shard int, bitmap binary")
-            .collect()
-        )
-        for row in parts:
+        for row in self._per_shard(urls, url_col, build, "shard int, bitmap binary"):
             self.bitmaps[row["shard"]] |= np.frombuffer(row["bitmap"], dtype=np.uint8)
 
     # ------------------------------------------------------------- metrics
@@ -154,12 +176,13 @@ class ShardedBloomSeenFilter:
         return float(self.fill_ratio() ** self.k)
 
 
-class ShardedCuckooSeenFilter:
+class ShardedCuckooSeenFilter(_ShardedSeenFilter):
     """Sharded cuckoo-filter URL-seen prefilter — the *deletable* half of
     the north rule's "bloom/cuckoo URL-seen" (Fan et al., CoNEXT'14).
 
     Same engine contract as :class:`ShardedBloomSeenFilter` (``split`` →
-    (definitely_new, maybe_seen), ``update`` folds newly-recorded URLs), plus
+    (definitely_new, maybe_seen) with fingerprint collisions bounded by
+    2c/2^16, ``update`` folds newly-recorded URLs), plus
     ``delete`` — the operation a bloom cannot do — for the recrawl/TTL
     workflow: expire a URL's snapshot and it becomes crawlable again without
     rebuilding the filter.
@@ -194,20 +217,15 @@ class ShardedCuckooSeenFilter:
         n_shards: int = 16,
         buckets_per_shard: int = 1 << 14,  # × 4 slots × 2 B = 128 KiB/shard
     ):
-        if n_shards & (n_shards - 1):
-            raise ValueError("n_shards must be a power of two")
+        super().__init__(spark, n_shards)
         if buckets_per_shard & (buckets_per_shard - 1):
             raise ValueError("buckets_per_shard must be a power of two")
-        self.spark = spark
-        self.n_shards = n_shards
         self.n_buckets = buckets_per_shard
         self.tables = np.zeros((n_shards, buckets_per_shard, 4), dtype=np.uint16)
         # per-shard multiset of stashed (bucket, fingerprint) → count
         self.stashes: list[dict[tuple[int, int], int]] = [
             {} for _ in range(n_shards)
         ]
-        self._bc = None
-        self._probed: DataFrame | None = None
 
     # ------------------------------------------------------------- internals
     @staticmethod
@@ -278,12 +296,29 @@ class ShardedCuckooSeenFilter:
         flat = np.frombuffer(raw, dtype=np.int64).reshape(-1, 3)
         return {(int(b), int(f)): int(c) for b, f, c in flat}
 
-    def _broadcast(self):
-        if self._bc is not None:
-            self._bc.unpersist()
-        probe_stashes = [frozenset(s.keys()) for s in self.stashes]
-        self._bc = self.spark.sparkContext.broadcast((self.tables, probe_stashes))
-        return self._bc
+    def _probe_state(self):
+        return self.tables, [frozenset(s.keys()) for s in self.stashes]
+
+    def _prober(self):
+        S, n_buckets = self.n_shards, self.n_buckets
+
+        def probe(state, v: np.ndarray) -> np.ndarray:
+            tables, stashes = state
+            shard, fp, i1, i2 = ShardedCuckooSeenFilter._fields(v, S, n_buckets)
+            res = (tables[shard, i1, :] == fp[:, None]).any(axis=1) | (
+                tables[shard, i2, :] == fp[:, None]
+            ).any(axis=1)
+            if any(stashes):
+                for j in np.flatnonzero(~res):
+                    st = stashes[shard[j]]
+                    if st and (
+                        (int(i1[j]), int(fp[j])) in st
+                        or (int(i2[j]), int(fp[j])) in st
+                    ):
+                        res[j] = True
+            return res
+
+        return probe
 
     def _apply_per_shard(self, urls: DataFrame, url_col: str, op: str) -> None:
         """Group by shard, run insert/delete over the sorted shard slice
@@ -315,12 +350,8 @@ class ShardedCuckooSeenFilter:
                 }
             )
 
-        parts = (
-            urls.select(url_hash(F.col(url_col)).alias("_h"))
-            .withColumn("_shard", F.pmod(F.col("_h"), F.lit(S)))
-            .groupBy("_shard")
-            .applyInPandas(run, "shard int, table binary, stash binary")
-            .collect()
+        parts = self._per_shard(
+            urls, url_col, run, "shard int, table binary, stash binary"
         )
         state_bc.unpersist()
         for row in parts:
@@ -338,51 +369,6 @@ class ShardedCuckooSeenFilter:
         URL was never inserted — deleting unknown keys is undefined for a
         cuckoo filter and would silently corrupt other keys."""
         self._apply_per_shard(urls, url_col, "delete")
-
-    def split(self, df: DataFrame, url_col: str = "url") -> tuple[DataFrame, DataFrame]:
-        """→ (definitely_new, maybe_seen); zero false negatives for every
-        currently-inserted key, fingerprint collisions bounded by 2c/2^16."""
-        bc = self._broadcast()
-        S, n_buckets = self.n_shards, self.n_buckets
-
-        @F.pandas_udf("boolean")
-        def maybe_seen(h: pd.Series) -> pd.Series:
-            tables, stashes = bc.value
-            v = h.to_numpy(dtype=np.int64).view(np.uint64)
-            if len(v) == 0:
-                return pd.Series([], dtype=bool)
-            shard, fp, i1, i2 = ShardedCuckooSeenFilter._fields(v, S, n_buckets)
-            res = (tables[shard, i1, :] == fp[:, None]).any(axis=1) | (
-                tables[shard, i2, :] == fp[:, None]
-            ).any(axis=1)
-            if any(stashes):
-                for j in np.flatnonzero(~res):
-                    st = stashes[shard[j]]
-                    if st and (
-                        (int(i1[j]), int(fp[j])) in st
-                        or (int(i2[j]), int(fp[j])) in st
-                    ):
-                        res[j] = True
-            return pd.Series(res)
-
-        # same one-round cache bound as the bloom (see its split/release)
-        self.release()
-        probed = (
-            df.withColumn("_h", url_hash(F.col(url_col)))
-            .withColumn("_maybe", maybe_seen(F.col("_h")))
-            .persist()
-        )
-        self._probed = probed
-        new = probed.filter(~F.col("_maybe")).drop("_h", "_maybe")
-        maybe = probed.filter(F.col("_maybe")).drop("_h", "_maybe")
-        return new, maybe
-
-    def release(self) -> None:
-        """Drop the cached probe of the last :meth:`split` (see the bloom's
-        :meth:`ShardedBloomSeenFilter.release`)."""
-        if self._probed is not None:
-            self._probed.unpersist()
-            self._probed = None
 
     # ------------------------------------------------------------- metrics
     def occupancy(self) -> float:

@@ -8,6 +8,7 @@ becomes a deterministic driver loop where each round is one DataFrame DAG
       → within-round first-wins dedup          (Window on url)        [F1]
       → left-anti join vs seen set (± bloom prefilter)                [J1]
       → global seq assignment (two-pass distributed rank)             [§8.2]
+        (a round that admits no URL ends the crawl here)
       → budget cut                                                    [F10]
       → fetch = left join against the pages table                     [S1]
       → branch: geo-MIME → downloads sink; non-200 → leaf             [F5/F7]
@@ -37,7 +38,6 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..constants import GEO_MIME_TYPES, MAX_CRAWL_ENGINE1, MAX_DEPTH
 from ..functions.ordering import with_global_seq
@@ -48,19 +48,24 @@ from .store import SnapshotStore
 TRACE_SCHEMA = (
     "seq long, url string, depth int, parent_url string, round int, host string"
 )
-FRONTIER_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("depth", T.IntegerType()),
-        T.StructField("parent_url", T.StringType()),
-        T.StructField("parent_seq", T.LongType()),
-        T.StructField("pos", T.IntegerType()),
-    ]
-)
 LINEAGE_SCHEMA = (
     "round int, partition_id int, urls_fetched long, bytes_fetched long, "
     "dedup_hits long, candidates long, recorded long"
 )
+
+
+def seed_frontier(seeds: DataFrame) -> DataFrame:
+    """Depth-0 frontier rows of ``seeds`` (seed_order, url, …): entry order
+    is seed_order (``crawler.go:37-43``), and ``parent_seq=-1`` sorts every
+    seed ahead of the expansion rows (all ``parent_seq>=0``)."""
+    return seeds.select(
+        F.col("url"),
+        F.lit(0).cast("int").alias("depth"),
+        F.lit(None).cast("string").alias("parent_url"),
+        F.lit(-1).cast("long").alias("parent_seq"),
+        F.col("seed_order").cast("int").alias("pos"),
+        F.lit(False).alias("is_geo"),
+    )
 
 
 @dataclass
@@ -110,14 +115,7 @@ class CrawlEngine:
     def run(self, seeds: DataFrame) -> CrawlRun:
         """``seeds``: (seed_order int, url string, …). Depth-0 entry order is
         seed_order (``crawler.go:37-43``)."""
-        frontier = seeds.select(
-            F.col("url"),
-            F.lit(0).cast("int").alias("depth"),
-            F.lit(None).cast("string").alias("parent_url"),
-            F.lit(-1).cast("long").alias("parent_seq"),
-            F.col("seed_order").cast("int").alias("pos"),
-            F.lit(False).alias("is_geo"),
-        )
+        frontier = seed_frontier(seeds)
         seen = self.spark.createDataFrame([], "url string, url_hash long")
         return self._loop(frontier, seen, start_round=0, recorded_total=0,
                           trace_parts=[], download_parts=[], text_parts=[],
@@ -146,14 +144,7 @@ class CrawlEngine:
         (operators.seen.ShardedCuckooSeenFilter: insert on crawl, delete
         on TTL expiry), where a rebuild would double-insert the surviving
         fingerprints and waste capacity."""
-        frontier = seeds.select(
-            F.col("url"),
-            F.lit(0).cast("int").alias("depth"),
-            F.lit(None).cast("string").alias("parent_url"),
-            F.lit(-1).cast("long").alias("parent_seq"),
-            F.col("seed_order").cast("int").alias("pos"),
-            F.lit(False).alias("is_geo"),
-        )
+        frontier = seed_frontier(seeds)
         seen = seen_urls.select(
             F.col("url"), url_hash(F.col("url")).alias("url_hash")
         )
@@ -175,8 +166,13 @@ class CrawlEngine:
         last = self.store.last_committed()
         if last < 0:
             raise ValueError("nothing committed yet")
-        meta = self.store.manifest()["rounds"][str(last)]
+        rounds_meta = self.store.manifest()["rounds"]
         frontier = self.store.read("frontier", last + 1)
+        if extra_seeds is not None:
+            # already-seen seeds are dropped by the round's J1 anti-join, so
+            # a fully-replayed batch admits nothing and commits nothing
+            frontier = frontier.unionByName(seed_frontier(extra_seeds))
+        trace_parts = self.store.read_series("trace", last)
         # the seen set IS the union of recorded trace URLs (the merge in
         # _loop adds exactly recorded_df per round), so it is rebuilt from
         # the per-round trace snapshots instead of being stored: writing
@@ -188,30 +184,14 @@ class CrawlEngine:
             DataFrame.unionByName,
             [
                 t.select("url", url_hash(F.col("url")).alias("url_hash"))
-                for t in self.store.read_series("trace", last)
+                for t in trace_parts
             ],
         )
-        if extra_seeds is not None:
-            # pre-drop already-seen seeds (the in-round anti-join would do
-            # it anyway): a fully-replayed batch then yields an empty
-            # frontier and the loop exits WITHOUT committing an empty
-            # round — foreachBatch replays become true no-ops
-            frontier = frontier.unionByName(
-                extra_seeds.select(
-                    F.col("url"),
-                    F.lit(0).cast("int").alias("depth"),
-                    F.lit(None).cast("string").alias("parent_url"),
-                    F.lit(-1).cast("long").alias("parent_seq"),
-                    F.col("seed_order").cast("int").alias("pos"),
-                    F.lit(False).alias("is_geo"),
-                ).join(seen.select("url"), "url", "left_anti")
-            )
         if self.seen_filter is not None:
             # the bloom's bits are in-memory state: rebuild from the seen
             # snapshot, else resumed rounds would route already-seen URLs
             # down the definitely-new path (false negatives)
             self.seen_filter.update(seen.select("url"))
-        trace_parts = self.store.read_series("trace", last)
         # reconcile stored download snapshots with the CURRENT
         # download_bytes setting (review r3): a crawl checkpointed without
         # bodies and resumed with --download-bytes (or vice versa) would
@@ -235,29 +215,18 @@ class CrawlEngine:
         lineage_rows = [
             tuple(row)
             for r in range(last + 1)
-            for row in self.store.manifest()["rounds"][str(r)]["lineage"]
+            for row in rounds_meta[str(r)]["lineage"]
         ]
-        # a fully-replayed (or fully-known) seed batch onto a drained crawl
-        # nets an empty frontier: return the stitched state without entering
-        # the loop, so no empty round is committed even with
-        # lineage_detail=False (whose loop checks emptiness only after one
-        # round). The take(1) touches only the small frontier.
-        saved_rounds = self.max_rounds
-        if extra_seeds is not None and not frontier.take(1):
-            self.max_rounds = 0
-        try:
-            return self._loop(
-                frontier,
-                seen,
-                start_round=last + 1,
-                recorded_total=int(meta["recorded_total"]),
-                trace_parts=trace_parts,
-                download_parts=download_parts,
-                text_parts=text_parts,
-                lineage_rows=lineage_rows,
-            )
-        finally:
-            self.max_rounds = saved_rounds
+        return self._loop(
+            frontier,
+            seen,
+            start_round=last + 1,
+            recorded_total=int(rounds_meta[str(last)]["recorded_total"]),
+            trace_parts=trace_parts,
+            download_parts=download_parts,
+            text_parts=text_parts,
+            lineage_rows=lineage_rows,
+        )
 
     def resume_with_seeds(self, seeds: DataFrame) -> CrawlRun:
         """Continuous-crawl entry: one call per arriving seed batch.
@@ -291,10 +260,7 @@ class CrawlEngine:
         # deferred slice re-enters incremented. Threaded ONLY when the
         # scheduler ages: at boost 0 no _wait column exists anywhere and
         # the plan is bit-identical to the pre-aging engine.
-        aging = bool(
-            self.scheduler is not None
-            and getattr(self.scheduler, "age_boost", 0)
-        )
+        aging = bool(self.scheduler is not None and self.scheduler.age_boost)
         if aging and "_wait" not in frontier.columns:
             frontier = frontier.withColumn("_wait", F.lit(0).cast("int"))
         rnd = start_round
@@ -302,15 +268,12 @@ class CrawlEngine:
             if self.max_crawl is not None and recorded_total > self.max_crawl:
                 break  # budget exhausted (crawler.go:52-55)
 
-            candidates = frontier
-            n_candidates = candidates.count() if self.lineage_detail else -1
-            if n_candidates == 0:
-                break
+            n_candidates = frontier.count() if self.lineage_detail else -1
 
             # F1 within-round first-wins dedup, deterministic order
             w = Window.partitionBy("url").orderBy("parent_seq", "pos")
             first = (
-                candidates.withColumn("_rn", F.row_number().over(w))
+                frontier.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
@@ -344,16 +307,20 @@ class CrawlEngine:
             new_seq, n_new = with_global_seq(
                 new, order_cols, seq_col="seq", start=recorded_total
             )
+            # the one end of a crawl (crawler.go:49-75): a round that admits
+            # nothing has no work left to fetch, expand or commit
+            if n_new == 0:
+                break
 
             # F10 budget: the reference records while pre-increment
-            # count <= max_crawl, i.e. keeps 0-based seq <= max_crawl
+            # count <= max_crawl, i.e. keeps 0-based seq <= max_crawl (the
+            # budget check at the loop head keeps n_recorded >= 1)
             if self.max_crawl is not None:
                 recorded_df = new_seq.filter(F.col("seq") <= F.lit(self.max_crawl))
                 n_recorded = min(n_new, self.max_crawl + 1 - recorded_total)
             else:
                 recorded_df = new_seq
                 n_recorded = n_new
-            n_recorded = max(n_recorded, 0)
 
             recorded_df = recorded_df.withColumn("host", url_host(F.col("url")))
             # no materialization here: recorded_df sits on top of the
@@ -445,15 +412,17 @@ class CrawlEngine:
                     "_wait", F.lit(0).cast("int")
                 )
             # politeness deferral: host-budget overflow re-enters the frontier
-            if self.scheduler is not None and getattr(self.scheduler, "deferred", None) is not None:
+            if self.scheduler is not None and self.scheduler.deferred is not None:
                 next_frontier = next_frontier.unionByName(
                     self.scheduler.deferred.select(*next_frontier.columns)
                 ).localCheckpoint(eager=True)
 
             # lineage (north rule): per-partition fetch metrics + round totals
             if self.lineage_detail:
-                n_first = first.count()
-                dedup_hits = (n_candidates - n_first) + (n_first - n_new)
+                # candidates the round did not admit: within-round
+                # duplicates, already-seen URLs and rows the scheduler
+                # deferred or dropped
+                dedup_hits = n_candidates - n_new
                 part_rows = [
                     (rnd, int(r["pid"]), int(r["n"]), int(r["b"] or 0), 0,
                      -1, -1)
@@ -506,16 +475,14 @@ class CrawlEngine:
 
             frontier = next_frontier
             rnd += 1
-            if not self.lineage_detail and n_recorded == 0:
-                break
 
         # the prefilter's probe cache and the scheduler's ranking cache are
         # single-round by construction (each round releases the previous);
         # release the final round's too — everything downstream of them was
         # materialized by that round's eager checkpoint
-        if self.seen_filter is not None and hasattr(self.seen_filter, "release"):
+        if self.seen_filter is not None:
             self.seen_filter.release()
-        if self.scheduler is not None and hasattr(self.scheduler, "release"):
+        if self.scheduler is not None:
             self.scheduler.release()
 
         spark = self.spark

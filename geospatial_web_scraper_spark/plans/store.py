@@ -1,9 +1,7 @@
 """Snapshot store — per-round checkpointed state with exact resume.
 
-Production target is Iceberg (each crawl round = one snapshot; resume = read
-at snapshot id; the driver's correctness sandbox has no Iceberg jars, so the
-default backend is parquet-directory snapshots + an atomically-renamed JSON
-manifest, which preserves the same contract:
+Parquet-directory snapshots plus an atomically-renamed JSON manifest; each
+crawl round is one committed snapshot:
 
 * ``write(name, df, round)``   → immutable ``<base>/<name>/round=<r>/`` dir
 * ``read(name, round)``        → DataFrame as-of that round
@@ -12,9 +10,8 @@ manifest, which preserves the same contract:
   restarts the interrupted round from its input state (exactly-once rounds)
 * ``last_committed()``         → resume point
 
-The Iceberg backend (``IcebergSnapshotStore``) carries the same interface and
-is import-gated; on a real cluster instantiate it with a configured catalog
-and crawl rounds become genuine Iceberg snapshots with time-travel resume.
+An Iceberg table (one snapshot per round, time-travel resume) maps onto the
+same contract; no such backend exists yet.
 """
 
 from __future__ import annotations
@@ -130,33 +127,3 @@ class SnapshotStore:
     def last_committed(self) -> int:
         return self.manifest()["last_committed"]
 
-
-class IcebergSnapshotStore(SnapshotStore):  # pragma: no cover - needs iceberg jars
-    """INTERFACE-ONLY, UNTESTED (honest disclosure — VERDICT r2 #8).
-
-    The intended production mapping of the same contract onto an Iceberg
-    catalog: each round's ``write`` an Iceberg append tagged with the
-    round number, ``read`` a time-travel to that round's snapshot. This
-    sandbox has no iceberg-spark-runtime jar and no network to fetch one,
-    so NO code behind this class has ever executed — instantiation fails
-    fast rather than pretending. Every tested behavior in this repo
-    (checkpoint/resume/compaction, the driver gate, all benchmarks) runs
-    on the parquet ``SnapshotStore`` above. On a real cluster, treat this
-    class as a frozen interface to implement against, not working code.
-    Requires ``spark.sql.catalog.<cat>`` configured with
-    ``org.apache.iceberg.spark.SparkCatalog``.
-    """
-
-    def __init__(self, spark: SparkSession, catalog: str, namespace: str):
-        try:
-            spark.sql(f"SELECT 1 FROM {catalog}.information_schema.namespaces LIMIT 1")
-        except Exception as exc:  # noqa: BLE001
-            raise NotImplementedError(
-                "Iceberg catalog not available in this environment; use "
-                "SnapshotStore (parquet snapshots) locally and "
-                "IcebergSnapshotStore on a cluster with iceberg-spark-runtime "
-                "on the classpath"
-            ) from exc
-        self.spark = spark
-        self.catalog = catalog
-        self.namespace = namespace

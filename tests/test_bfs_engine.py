@@ -252,3 +252,63 @@ def test_resume_with_toggled_download_bytes(spark, tmp_path_factory, oracle_run)
     assert sorted(r["url"] for r in run2.downloads.collect()) == sorted(
         oracle_run.downloads
     )
+
+
+@pytest.fixture(scope="module")
+def unbudgeted_runs(spark, tmp_path_factory):
+    """The N=120 FIFO crawl to exhaustion (no budget), committed to a
+    snapshot store, once with lineage_detail on and once off."""
+    runs = {}
+    for detail in (True, False):
+        store = SnapshotStore(spark, str(tmp_path_factory.mktemp("unbudgeted")))
+        run = CrawlEngine(
+            spark, corpus.corpus_df(spark, N), max_crawl=None,
+            lineage_detail=detail, store=store,
+        ).run(corpus.seeds_df(spark, N))
+        runs[detail] = (run, store)
+    return runs
+
+
+def test_lineage_modes_end_the_crawl_alike(spark, unbudgeted_runs):
+    """A crawl ends the same way whatever lineage_detail is: at the first
+    round that admits no URL, which is neither fetched nor committed. A
+    fully replayed seed batch onto the drained store commits nothing."""
+    pages = corpus.pages_dict(N)
+    seeds = [corpus.url_of(i) for i in corpus.seed_ids(N)]
+    want = crawl_oracle(pages, seeds, max_crawl=None)
+    (on, store_on), (off, store_off) = unbudgeted_runs[True], unbudgeted_runs[False]
+
+    assert _trace_rows(on.trace) == _trace_rows(off.trace) == want.trace
+    assert on.rounds == off.rounds == len(want.lineage)
+    lineage_rounds = [
+        sorted({r["round"] for r in run.lineage.collect()}) for run in (on, off)
+    ]
+    assert lineage_rounds[0] == lineage_rounds[1] == list(range(on.rounds))
+    assert store_on.last_committed() == store_off.last_committed() == on.rounds - 1
+
+    last = store_on.last_committed()
+    replay = CrawlEngine(
+        spark, corpus.corpus_df(spark, N), max_crawl=None,
+        store=SnapshotStore(spark, store_on.base_dir),
+    ).resume_with_seeds(corpus.seeds_df(spark, N))
+    assert replay.rounds == 0
+    assert store_on.last_committed() == last
+    assert _trace_rows(replay.trace) == want.trace
+
+
+def test_lineage_round_rows_pinned(unbudgeted_runs):
+    """Per-round (candidates, dedup_hits, recorded) of the unbudgeted N=120
+    crawl: dedup_hits counts within-round duplicates plus already-seen
+    URLs, as the oracle's lineage does."""
+    run, _ = unbudgeted_runs[True]
+    rows = sorted(
+        (r["round"], r["candidates"], r["dedup_hits"], r["recorded"])
+        for r in run.lineage.where("partition_id = -1").collect()
+    )
+    assert [r[1:] for r in rows] == [
+        (6, 0, 6), (26, 3, 23), (83, 33, 50), (152, 91, 61)
+    ]
+    pages = corpus.pages_dict(N)
+    seeds = [corpus.url_of(i) for i in corpus.seed_ids(N)]
+    want = crawl_oracle(pages, seeds, max_crawl=None).lineage
+    assert rows == [(rnd, c, d, rec) for rnd, c, rec, d in want]

@@ -1,8 +1,7 @@
 """Static catalog checks that need no Spark session: the QUERIES/ORACLES key
 sets agree, every SURVEY §2 row sits inside the 50-row recorded window
-(build-notes invariant 5), and every module of the package, every script
-and bench.py imports cleanly (no import left dangling by a deleted
-module)."""
+(build-notes invariant 5), and every module of the package and every
+script imports cleanly (no import left dangling by a deleted module)."""
 
 import importlib
 import importlib.util
@@ -55,7 +54,7 @@ def test_package_module_imports(name):
 
 @pytest.mark.parametrize(
     "path",
-    sorted(ROOT.joinpath("scripts").glob("*.py")) + [ROOT / "bench.py"],
+    sorted(ROOT.joinpath("scripts").glob("*.py")),
     ids=lambda p: p.relative_to(ROOT).as_posix(),
 )
 def test_script_imports(path):
