@@ -2954,10 +2954,10 @@ def q_c7_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_c10_xml_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C10/S6 (metadata.go:180-212): the secondary RSS/Atom harvest as an
-    offline join — every page's <link type~=xml> targets are resolved,
-    joined against the per-host xml_docs feed corpus, parsed with the frozen
-    Go flat-unmarshal semantics, and folded into title/description through
-    the raw string builders. All four branches are value-checked: Atom-style
+    offline lookup — every page's <link type~=xml> targets are resolved,
+    looked up in the per-host xml_docs feed corpus (broadcast once), parsed
+    with the frozen Go flat-unmarshal semantics, and folded into
+    title/description through the raw string builders. All four branches are value-checked: Atom-style
     feeds fold, standard RSS binds nothing (the reference quirk), malformed
     XML is skipped, and pages without feed links pass through unchanged."""
     from .operators.extract import extract_meta_with_feeds

@@ -9,7 +9,11 @@ one page row in → array of link structs out, exploded engine-side with
 title/description/keywords struct whose ``description`` is the
 byte-identical extracted text per url.
 
-Both delegate per-document work to the shared pure-Python kernel
+``extract_round_outputs`` is the crawl engine's fused per-round pass:
+downloads, links, texts (with the optional C10 feeds fold) and
+per-partition lineage out of ONE Arrow scan of the fetched pages.
+
+All delegate per-document work to the shared pure-Python kernel
 (:mod:`..kernel`), which the single-threaded oracle also uses — Spark adds
 the distribution, Arrow the batching; the semantics live in one place.
 """
@@ -17,11 +21,15 @@ the distribution, Arrow the batching; the semantics live in one place.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark import TaskContext
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernel import extract_links, extract_metadata
+from ..kernel import (
+    extract_links,
+    extract_metadata,
+    extract_metadata_with_feeds,
+)
 
 LINK_TYPE = T.ArrayType(
     T.StructType(
@@ -85,25 +93,6 @@ def extract_meta_udf(html: pd.Series, base_url: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"title": titles, "description": descs, "keywords": kws})
 
 
-@F.pandas_udf(T.StringType())
-def resolve_url_udf(base: pd.Series, href: pd.Series) -> pd.Series:
-    """Go ``base.Parse(href)`` (metadata.go:184): resolved absolute URL,
-    NULL when the base/href pair is unresolvable (the reference's
-    ``continue``)."""
-    from urllib.parse import urljoin
-
-    out = []
-    for b, h in zip(base, href):
-        if b is None or h is None:
-            out.append(None)
-            continue
-        try:
-            out.append(urljoin(b, h))
-        except ValueError:
-            out.append(None)
-    return pd.Series(out, dtype=object)
-
-
 FEED_META_TYPE = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -113,64 +102,41 @@ FEED_META_TYPE = T.StructType(
 )
 
 
+def feed_lookup(feeds):
+    """The offline ``feeds(url, xml)`` table as ONE broadcast ``{url: xml}``
+    dict — the stand-in for the reference's secondary feed GET
+    (``metadata.go:189-199``). One feed document per host keeps it small
+    (|feeds| ≪ |pages|); rows with a NULL ``xml`` are fetch errors and are
+    left out, so a lookup miss is the reference's ``continue``. On a
+    duplicated url the greatest ``xml`` wins, deterministically."""
+    rows = feeds.where(F.col("xml").isNotNull()).select("url", "xml").collect()
+    return feeds.sparkSession.sparkContext.broadcast(
+        dict(sorted((r["url"], r["xml"]) for r in rows))
+    )
+
+
 def extract_meta_with_feeds(pages, feeds, html_col: str = "html",
                             url_col: str = "url"):
     """C10 — metadata extraction INCLUDING the secondary RSS/Atom harvest
     (``metadata.go:180-212``), with the 5s-timeout HTTP GET modeled as a
-    join against an offline ``feeds(url, xml)`` table.
+    lookup in the offline ``feeds(url, xml)`` table.
 
-    Distributed shape (the 100 TB plan): the xml hrefs are exploded off the
-    pages (tiny rows — no HTML), resolved, equi-joined against the feeds
-    table (broadcast: one feed per HOST, so |feeds| ≪ |pages|), and grouped
-    back per page in document order; then ONE Arrow pass over the pages
-    re-runs the metadata walk and folds the joined feed bodies through the
-    raw string builders (kernel.extract_metadata_with_feeds — shared with
-    the oracle). HTML bytes never shuffle: the join and groupBy move only
-    (url, href, xml) rows, and the final pass inherits the pages scan's
-    partitioning via a frontier-style broadcast join of the small grouped
-    side."""
-    from ..kernel import extract_metadata_with_feeds as _kernel_fold
-
-    hrefs = pages.select(
-        F.col(url_col),
-        F.posexplode(
-            extract_xml_links_udf(F.col(html_col), F.col(url_col))
-        ).alias("_xpos", "_href"),
-    ).withColumn("_feed_url", resolve_url_udf(F.col(url_col), F.col("_href")))
-    joined = hrefs.join(
-        F.broadcast(
-            feeds.select(F.col("url").alias("_feed_url"), F.col("xml").alias("_xml"))
-        ),
-        "_feed_url",
-        "left",
-    )
-    grouped = joined.groupBy(url_col).agg(
-        F.array_sort(
-            F.collect_list(F.struct("_xpos", "_feed_url", "_xml"))
-        ).alias("_feeds")
-    )
-    withf = pages.select(url_col, html_col).join(
-        F.broadcast(grouped), url_col, "left"
-    )
+    Distributed shape: the feeds table is broadcast once as a
+    ``{url: xml}`` dict (:func:`feed_lookup`) and ONE Arrow pass over the
+    pages runs the kernel fold (``kernel.extract_metadata_with_feeds``,
+    shared with the oracle) per page, resolving each xml href and looking
+    it up in place. No join, no shuffle: the pass inherits the pages
+    scan's partitioning, so HTML bytes never move."""
+    lookup = feed_lookup(feeds)
 
     def gen(batches):
+        feed_fetch = lookup.value.get
         for pdf in batches:
             urls, titles, descs = [], [], []
-            col_url = pdf[url_col]
-            col_html = pdf[html_col]
-            col_feeds = pdf["_feeds"]
-            for ridx in range(len(pdf)):
-                h = col_html.iloc[ridx]
-                u = col_url.iloc[ridx]
+            for u, h in zip(pdf[url_col], pdf[html_col]):
                 if h is None or u is None:
                     continue
-                fl = col_feeds.iloc[ridx]
-                lookup = {}
-                if fl is not None:
-                    for s in fl:
-                        if s["_xml"] is not None:
-                            lookup[s["_feed_url"]] = s["_xml"]
-                md = _kernel_fold(bytes(h), u, lookup.get)
+                md = extract_metadata_with_feeds(bytes(h), u, feed_fetch)
                 urls.append(u)
                 titles.append(md["title"])
                 descs.append(md["description"])
@@ -178,7 +144,7 @@ def extract_meta_with_feeds(pages, feeds, html_col: str = "html",
                 {"url": urls, "title": titles, "description": descs}
             )
 
-    return withf.mapInPandas(gen, FEED_META_TYPE)
+    return pages.select(url_col, html_col).mapInPandas(gen, FEED_META_TYPE)
 
 
 def extract_links_flat(
@@ -240,49 +206,51 @@ ROUND_OUT_SCHEMA = T.StructType(
         T.StructField("url", T.StringType()),
         T.StructField("seq", T.LongType()),
         T.StructField("depth", T.IntegerType()),
-        T.StructField("kind", T.IntegerType()),  # 0 = download, 1 = link, 2 = meta
+        # 0 = download, 1 = link, 2 = meta, 3 = partition summary
+        T.StructField("kind", T.IntegerType()),
         T.StructField("link_url", T.StringType()),
         T.StructField("link_pos", T.IntegerType()),
         T.StructField("link_is_geo", T.BooleanType()),
         T.StructField("title", T.StringType()),
         T.StructField("text", T.StringType()),
         T.StructField("body", T.BinaryType()),
+        T.StructField("partition_id", T.IntegerType()),
+        T.StructField("urls_fetched", T.LongType()),
+        T.StructField("bytes_fetched", T.LongType()),
     ]
 )
 
 
 def extract_round_outputs(fetched, geo_mime_types, max_depth: int,
                           collect_text: bool = False,
-                          carry_download_bytes: bool = False):
-    """Fused per-round fetch classification + link extraction in ONE pass
-    over the fetched pages (columns: url, seq, depth, status, content_type,
-    html).
+                          carry_download_bytes: bool = False,
+                          feeds=None):
+    """The round's ONE pass over the fetched pages (columns: url, seq,
+    depth, status, content_type, html): fetch classification, link
+    extraction, text extraction and per-partition lineage together.
 
-    Replaces two separate jobs — the downloads branch and the extraction
-    branch — each of which re-scanned the pages source. At 100 TB the pages
-    scan is the dominant IO, so one pass per round is the difference between
-    reading the fetched slice once or twice; locally it removes ~half the
-    round's fixed job overhead, which is what the 2→8-core scaling
-    efficiency is most sensitive to.
+    At 100 TB the pages scan is the dominant IO, so every output the round
+    needs from the fetched slice comes out of this single Arrow pass; the
+    engine reads nothing else from ``fetched``. The pass does ship HTML
+    through the Arrow worker for rows that only become ``kind=0`` download
+    rows — that small transfer buys removing whole extra source scans.
 
-    With ``collect_text=True`` metadata extraction (X2) is folded into the
-    SAME pass as ``kind=2`` rows. This pass is the round's only extraction
-    scan of the fetched slice, but not always its only scan: the
-    offline-feeds variant (C10) joins the xml_docs table and keeps its own
-    pass, and with ``lineage_detail`` on the engine runs the fetch join a
-    second time for its per-partition pages/bytes ``groupBy``. The fused
-    pass does ship HTML
-    through the Arrow worker for rows that only become kind=0 download
-    rows (the pre-fusion downloads branch was column-pruned off html) —
-    that small Arrow transfer buys removing whole extra source scans,
-    which wins everywhere the download fraction is not dominant.
+    Row routing: status==200 & geo MIME → one ``kind=0`` download row;
+    status==200 & non-geo & html present → one ``kind=2`` meta row when
+    ``collect_text`` (no depth gate) and, when depth+1 < max_depth,
+    ``kind=1`` link rows in document order; everything else (404s, fetch
+    leaves) emits no row of its own.
 
-    Row routing (same filters the engine previously applied branch-wise):
-    status==200 & geo MIME → one ``kind=0`` download row; status==200 &
-    non-geo & html present → one ``kind=2`` meta row when collect_text
-    (no depth gate — mirrors the engine's meta branch) and, when
-    depth+1 < max_depth, ``kind=1`` link rows in document order;
-    everything else (404s, fetch leaves) emits nothing.
+    ``feeds`` is an optional broadcast ``{url: xml}`` dict
+    (:func:`feed_lookup`): with it, ``kind=2`` rows run the C10 fold
+    (``kernel.extract_metadata_with_feeds``, the RSS/Atom harvest of
+    ``metadata.go:180-212``) instead of the plain metadata walk.
+
+    Every partition that saw fetched rows ends with one ``kind=3`` summary
+    row: its ``partition_id``, the rows it fetched (``urls_fetched``, all
+    statuses) and the summed length of their non-NULL html
+    (``bytes_fetched``) — the engine's per-partition lineage, at the cost
+    of one tiny row per partition and no per-row parse work.
 
     With ``carry_download_bytes=True`` each ``kind=0`` row also carries the
     fetched body in the ``body`` binary column — the K1/K2/K3 file sink's
@@ -292,6 +260,8 @@ def extract_round_outputs(fetched, geo_mime_types, max_depth: int,
     that only needs the manifest should not pay for."""
 
     def gen(batches):
+        feed_fetch = None if feeds is None else feeds.value.get
+        n_rows = n_bytes = 0
         for pdf in batches:
             urls: list = []
             seqs: list = []
@@ -323,6 +293,8 @@ def extract_round_outputs(fetched, geo_mime_types, max_depth: int,
             col_status = pdf["status"]
             col_ct = pdf["content_type"]
             col_html = pdf["html"]
+            n_rows += len(pdf)
+            n_bytes += sum(len(h) for h in col_html if h is not None)
             for ridx in range(len(pdf)):
                 if col_status.iloc[ridx] != 200:
                     continue
@@ -342,7 +314,11 @@ def extract_round_outputs(fetched, geo_mime_types, max_depth: int,
                     continue
                 seq = col_seq.iloc[ridx]
                 if collect_text:
-                    md = extract_metadata(bytes(h), u)
+                    md = (
+                        extract_metadata(bytes(h), u)
+                        if feed_fetch is None
+                        else extract_metadata_with_feeds(bytes(h), u, feed_fetch)
+                    )
                     emit(u, seq, depth, 2,
                          title=md["title"], text=md["description"])
                 if depth + 1 >= max_depth:
@@ -351,6 +327,7 @@ def extract_round_outputs(fetched, geo_mime_types, max_depth: int,
                 for link in links:
                     emit(u, seq, depth, 1, l_url=link["url"],
                          l_pos=link["pos"], l_geo=link["is_geo"])
+            nulls = [None] * len(urls)
             yield pd.DataFrame(
                 {
                     "url": urls,
@@ -363,8 +340,20 @@ def extract_round_outputs(fetched, geo_mime_types, max_depth: int,
                     "title": pd.Series(titles, dtype="object"),
                     "text": pd.Series(texts, dtype="object"),
                     "body": pd.Series(bodies, dtype="object"),
+                    "partition_id": nulls,
+                    "urls_fetched": nulls,
+                    "bytes_fetched": nulls,
                 }
             )
+        if n_rows:
+            summary = {f.name: [None] for f in ROUND_OUT_SCHEMA.fields}
+            summary.update(
+                kind=[3],
+                partition_id=[TaskContext.get().partitionId()],
+                urls_fetched=[n_rows],
+                bytes_fetched=[n_bytes],
+            )
+            yield pd.DataFrame(summary)
 
     cols = ["url", "seq", "depth", "status", "content_type", "html"]
     return fetched.select(*cols).mapInPandas(gen, ROUND_OUT_SCHEMA)

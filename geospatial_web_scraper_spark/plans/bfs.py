@@ -11,9 +11,11 @@ becomes a deterministic driver loop where each round is one DataFrame DAG
         (a round that admits no URL ends the crawl here)
       → budget cut                                                    [F10]
       → fetch = left join against the pages table                     [S1]
-      → branch: geo-MIME → downloads sink; non-200 → leaf             [F5/F7]
-      → extract_links (Arrow UDF) + posexplode, depth gate            [X1/F4]
-      → next frontier; seen ∪ recorded; lineage row                   [U1/K4]
+      → ONE fused Arrow pass over the fetched slice:
+          geo-MIME → downloads sink; non-200 → leaf                   [F5/F7]
+          links in document order, depth gate                         [X1/F4]
+          texts (± offline feeds fold), per-partition summary  [X2/C10/K4]
+      → next frontier; seen ∪ recorded; lineage rows                  [U1/K4]
       → (optional) snapshot commit → exact resume                     [K5]
 
 Scale notes (the 1000-executor / 10^10-frontier design point):
@@ -42,7 +44,7 @@ from pyspark.sql import functions as F
 from ..constants import GEO_MIME_TYPES, MAX_CRAWL_ENGINE1, MAX_DEPTH
 from ..functions.ordering import with_global_seq
 from ..functions.urls import url_hash, url_host
-from ..operators.extract import extract_round_outputs
+from ..operators.extract import extract_round_outputs, feed_lookup
 from .store import SnapshotStore
 
 TRACE_SCHEMA = (
@@ -160,7 +162,10 @@ class CrawlEngine:
         frontier at depth 0 — the continuous-crawl ingest path (see
         :meth:`resume_with_seeds`). Injected seeds carry ``parent_seq=-1``,
         which sorts ahead of every expansion row (all ``parent_seq>=0``
-        after round 0), so the merged round order stays deterministic."""
+        after round 0), so the merged round order stays deterministic.
+        On an aging crawl they enter with ``_wait`` 0; a replayed seed
+        still pending from an earlier batch keeps its own, larger
+        ``_wait`` (the round's first-wins dedup prefers it)."""
         if self.store is None:
             raise ValueError("resume requires a SnapshotStore")
         last = self.store.last_committed()
@@ -171,7 +176,10 @@ class CrawlEngine:
         if extra_seeds is not None:
             # already-seen seeds are dropped by the round's J1 anti-join, so
             # a fully-replayed batch admits nothing and commits nothing
-            frontier = frontier.unionByName(seed_frontier(extra_seeds))
+            seeds = seed_frontier(extra_seeds)
+            if "_wait" in frontier.columns:
+                seeds = seeds.withColumn("_wait", F.lit(0).cast("int"))
+            frontier = frontier.unionByName(seeds)
         trace_parts = self.store.read_series("trace", last)
         # the seen set IS the union of recorded trace URLs (the merge in
         # _loop adds exactly recorded_df per round), so it is rebuilt from
@@ -263,6 +271,16 @@ class CrawlEngine:
         aging = bool(self.scheduler is not None and self.scheduler.age_boost)
         if aging and "_wait" not in frontier.columns:
             frontier = frontier.withColumn("_wait", F.lit(0).cast("int"))
+        # F1 first-wins order; on an aging crawl a tie on (parent_seq, pos)
+        # is a replayed seed against its still-pending copy, and the copy
+        # that has waited longer wins, so a replay keeps its priority
+        first_order = ["parent_seq", "pos"] + ([F.desc("_wait")] if aging else [])
+        # C10: the feeds table is broadcast once per crawl, not per round
+        feeds = (
+            feed_lookup(self.feeds)
+            if self.collect_text and self.feeds is not None
+            else None
+        )
         rnd = start_round
         while rnd < start_round + self.max_rounds:
             if self.max_crawl is not None and recorded_total > self.max_crawl:
@@ -271,7 +289,7 @@ class CrawlEngine:
             n_candidates = frontier.count() if self.lineage_detail else -1
 
             # F1 within-round first-wins dedup, deterministic order
-            w = Window.partitionBy("url").orderBy("parent_seq", "pos")
+            w = Window.partitionBy("url").orderBy(*first_order)
             first = (
                 frontier.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
@@ -355,48 +373,26 @@ class CrawlEngine:
                 par = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
                 fetched = rec_small.join(self.pages, "url", "inner").repartition(par)
 
-            # fused round pass: ONE scan of the fetched slice classifies
-            # downloads (F7) and extracts links (X1, depth-gated) together —
-            # the pages source is read once per round, not once per branch.
-            # The single localCheckpoint materializes only the small output
-            # rows (never HTML) and truncates cross-round plan growth.
-            fuse_text = self.collect_text and self.feeds is None
+            # fused round pass: the round's ONE scan of the fetched slice
+            # classifies downloads (F7), extracts links (X1, depth-gated)
+            # and texts (X2, ± the C10 feeds fold) and sums each
+            # partition's pages and bytes for the lineage. The single
+            # localCheckpoint materializes only the small output rows
+            # (never HTML) and truncates cross-round plan growth.
             round_out = extract_round_outputs(
                 fetched, GEO_MIME_TYPES, self.max_depth,
-                collect_text=fuse_text,
+                collect_text=self.collect_text,
                 carry_download_bytes=self.download_bytes,
+                feeds=feeds,
             ).localCheckpoint(eager=True)
             dl_cols = ["url", "body"] if self.download_bytes else ["url"]
             downloads_r = round_out.filter(F.col("kind") == 0).select(*dl_cols)
             download_parts.append(downloads_r)
-
-            if fuse_text:
-                # X2 folded into the fused pass: kind=2 rows carry
-                # title/text, so the fetched slice is scanned once per
-                # round even with text collection on
+            if self.collect_text:
                 text_parts.append(
                     round_out.filter(F.col("kind") == 2)
                     .select("url", "title", "text")
                 )
-            elif self.collect_text:
-                # offline-feeds variant (C10): metadata needs the xml_docs
-                # join, which keeps its own pass over the html pages
-                html_pages = fetched.filter(
-                    (F.col("status") == 200)
-                    & ~F.col("content_type").isin(*GEO_MIME_TYPES)
-                    & F.col("html").isNotNull()
-                )
-                # reference parity: ExtractMetadata's secondary RSS
-                # harvest runs during the crawl (metadata.go:180-212);
-                # the offline feeds table stands in for the fetch
-                from ..operators.extract import extract_meta_with_feeds
-
-                meta_df = extract_meta_with_feeds(
-                    html_pages.select("url", "html"), self.feeds
-                ).select(
-                    "url", "title", F.col("description").alias("text")
-                )
-                text_parts.append(meta_df.localCheckpoint(eager=True))
 
             flat = round_out.filter(F.col("kind") == 1)
             next_frontier = flat.select(
@@ -423,16 +419,12 @@ class CrawlEngine:
                 # duplicates, already-seen URLs and rows the scheduler
                 # deferred or dropped
                 dedup_hits = n_candidates - n_new
+                # per-partition rows: the fused pass's kind=3 summaries,
+                # read off the checkpointed round output in partition order
                 part_rows = [
-                    (rnd, int(r["pid"]), int(r["n"]), int(r["b"] or 0), 0,
-                     -1, -1)
-                    for r in fetched.groupBy(
-                        F.spark_partition_id().alias("pid")
-                    )
-                    .agg(
-                        F.count("*").alias("n"),
-                        F.sum(F.length("html")).alias("b"),
-                    )
+                    (rnd, r[0], r[1], r[2], 0, -1, -1)
+                    for r in round_out.filter(F.col("kind") == 3)
+                    .select("partition_id", "urls_fetched", "bytes_fetched")
                     .collect()
                 ]
                 lineage_rows.extend(part_rows)
@@ -484,6 +476,8 @@ class CrawlEngine:
             self.seen_filter.release()
         if self.scheduler is not None:
             self.scheduler.release()
+        if feeds is not None:
+            feeds.destroy()
 
         spark = self.spark
         empty_trace = spark.createDataFrame([], TRACE_SCHEMA)

@@ -80,6 +80,26 @@ def main() -> None:
     ap.add_argument("--bloom-shards", type=int, default=0,
                     help=">0 enables the sharded bloom seen prefilter")
     args = ap.parse_args()
+    # reject flags the crawl would silently ignore, before Spark starts
+    if not args.synthetic_pages and not (
+        (args.pages or args.pages_warc) and args.seeds
+    ):
+        ap.error("--pages/--pages-warc and --seeds required without "
+                 "--synthetic-pages")
+    if args.feeds and not args.collect_text:
+        ap.error("--feeds folds feeds into collected text: add --collect-text")
+    if args.scheduler == "fifo":
+        for flag, value in [
+            ("--robots", args.robots),
+            ("--host-budgets", args.host_budgets),
+            ("--rank-table", args.rank_table),
+            ("--trap-templates", args.trap_templates),
+            ("--age-boost", args.age_boost),
+        ]:
+            if value:
+                ap.error(f"{flag} needs --scheduler priority")
+    if (args.resume or args.compact) and not args.checkpoint_dir:
+        ap.error("--resume and --compact need --checkpoint-dir")
 
     from pyspark.sql import SparkSession
 
@@ -99,9 +119,6 @@ def main() -> None:
         pages = corpus.corpus_df(spark, args.synthetic_pages)
         seeds = corpus.seeds_df(spark, args.synthetic_pages)
     else:
-        if not (args.pages or args.pages_warc) or not args.seeds:
-            ap.error("--pages/--pages-warc and --seeds required without "
-                     "--synthetic-pages")
         if args.pages_warc:
             from geospatial_web_scraper_spark.sources.warc import (
                 pages_from_warc,
@@ -189,7 +206,7 @@ def main() -> None:
         idx.write.mode("overwrite").parquet(f"{args.output}/warc_index")
     # compact AFTER the output writes: a resumed run's DataFrames read the
     # store's per-round dirs lazily, which compaction deletes
-    if args.compact and store is not None:
+    if args.compact:
         store.compact()
     print(
         f"crawl done: recorded={run.recorded} rounds={run.rounds} "

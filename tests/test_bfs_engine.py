@@ -312,3 +312,29 @@ def test_lineage_round_rows_pinned(unbudgeted_runs):
     seeds = [corpus.url_of(i) for i in corpus.seed_ids(N)]
     want = crawl_oracle(pages, seeds, max_crawl=None).lineage
     assert rows == [(rnd, c, d, rec) for rnd, c, rec, d in want]
+
+
+def test_lineage_partition_rows_sum_to_fetched_pages(unbudgeted_runs):
+    """Per-partition rows of the unbudgeted N=120 crawl: in every round the
+    partitions account for exactly the trace URLs the pages table holds
+    (all statuses) and their html bytes, each partition once. The
+    lineage-off crawl writes no per-partition rows."""
+    pages = corpus.pages_dict(N)
+    run, _ = unbudgeted_runs[True]
+    trace = run.trace.select("round", "url").collect()
+    part = run.lineage.where("partition_id >= 0").collect()
+    assert part
+    for rnd in range(run.rounds):
+        fetched = [
+            pages[r["url"]] for r in trace
+            if r["round"] == rnd and r["url"] in pages
+        ]
+        rows = [r for r in part if r["round"] == rnd]
+        assert sum(r["urls_fetched"] for r in rows) == len(fetched), rnd
+        assert sum(r["bytes_fetched"] for r in rows) == sum(
+            len(p["html"].encode("utf-8")) for p in fetched
+        ), rnd
+        pids = [r["partition_id"] for r in rows]
+        assert len(pids) == len(set(pids)), rnd
+    off, _ = unbudgeted_runs[False]
+    assert off.lineage.where("partition_id >= 0").count() == 0

@@ -441,3 +441,31 @@ def test_aging_admits_starved_urls_earlier(spark):
     assert shared, "traces share no URLs"
     earlier = sum(1 for u in shared if aged[u] < plain[u])
     assert earlier > 0, "aging never accelerated any deferred URL"
+
+
+def test_seed_replay_on_aging_crawl_matches_uninterrupted(spark, tmp_path):
+    # resume_with_seeds on an aging crawl: the stored frontier carries
+    # _wait, injected seeds enter at 0, and a seed still pending from
+    # round 0 (host0 holds two seeds, one token) keeps its larger _wait
+    # over its replayed copy — so replaying the seed batch after one
+    # committed round reproduces the uninterrupted 2-round trace
+    from geospatial_web_scraper_spark.plans.store import SnapshotStore
+
+    n = 300
+
+    def engine(**kw):
+        sched = PolitenessScheduler(default_tokens_per_round=1, age_boost=200)
+        return CrawlEngine(spark, corpus.corpus_df(spark, n), max_crawl=None,
+                           scheduler=sched, **kw)
+
+    def trace(run):
+        cols = ["seq", "url", "depth", "parent_url", "round"]
+        return sorted(tuple(r) for r in run.trace.select(*cols).collect())
+
+    seeds = corpus.seeds_df(spark, n)
+    first = engine(store=SnapshotStore(spark, str(tmp_path)), max_rounds=1)
+    assert first.resume_with_seeds(seeds).rounds == 1
+    replay = engine(store=SnapshotStore(spark, str(tmp_path)), max_rounds=1)
+    resumed = replay.resume_with_seeds(seeds)
+    assert resumed.rounds == 1
+    assert trace(resumed) == trace(engine(max_rounds=2).run(seeds))

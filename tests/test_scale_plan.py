@@ -105,17 +105,26 @@ def test_neardup_embedding_is_bucket_blocked(spark):
 
 
 def test_c10_feed_fold_never_shuffles_html(spark):
-    """The feed-fold join/groupBy move only (url, href, xml) rows; HTML
-    bytes stay in the pages scan's partitions (feeds + regrouped side are
-    broadcast back into it). An Exchange carrying html would re-ship the
+    """The feed fold runs inside the pages scan's partitions (the feeds
+    table is a broadcast dict, folded in place by one MapInPandas), so
+    HTML bytes never move. An Exchange carrying html would re-ship the
     dominant data volume at every round."""
     import re
 
     df = entry_mod.queries()["c10_xml_meta"](spark, SF)
     plan = _plan(df)
-    assert "BroadcastHashJoin" in plan, plan
+    assert "MapInPandas" in plan, plan
     for m in re.finditer(r"Exchange [^\n]*", plan):
         assert "html" not in m.group(0), m.group(0)
+
+
+def test_c10_xml_meta_has_no_exchange(spark):
+    """The feed fold is one Arrow pass over the pages scan against the
+    broadcast feeds dict: one MapInPandas, no join, no shuffle."""
+    plan = _plan(entry_mod.queries()["c10_xml_meta"](spark, SF))
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Exchange" not in plan, plan
+    assert "Join" not in plan, plan
 
 
 def test_column_pruning_on_projection(spark):
