@@ -552,8 +552,7 @@ def q_crawl_priority_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.politeness import PolitenessScheduler
 
     sched = PolitenessScheduler(
-        default_tokens_per_round=1_000_000_000,
-        defer_overflow=False,
+        default_tokens_per_round=None,
         tiebreak="url",
     )
     eng = CrawlEngine(
@@ -578,7 +577,6 @@ def q_crawl_deferral_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sched = PolitenessScheduler(
         default_tokens_per_round=2,
-        defer_overflow=True,
         tiebreak="url",
     )
     eng = CrawlEngine(
@@ -614,7 +612,6 @@ def q_crawl_aging_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sched = PolitenessScheduler(
         default_tokens_per_round=2,
-        defer_overflow=True,
         tiebreak="url",
         age_boost=AGE_BOOST,
     )
@@ -670,7 +667,6 @@ def q_crawl_apportioned_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     sched = PolitenessScheduler(
         host_budget=_corpus_apportioned_budget(spark),
         default_tokens_per_round=1,
-        defer_overflow=True,
         tiebreak="url",
     )
     eng = CrawlEngine(
@@ -854,7 +850,6 @@ def q_crawl_crawldelay_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     budgets = budgets_from_delays(rules, round_seconds=8.0, default_tokens=6)
     sched = PolitenessScheduler(
         default_tokens_per_round=2,
-        defer_overflow=True,
         tiebreak="url",
         host_budget=budgets,
     )
@@ -925,7 +920,6 @@ def q_crawl_ppr_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sched = PolitenessScheduler(
         default_tokens_per_round=None,
-        defer_overflow=False,
         tiebreak="url",
         rank_table=_corpus_ppr_rank_table(spark),
     )
@@ -974,7 +968,6 @@ def q_crawl_opic_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sched = PolitenessScheduler(
         default_tokens_per_round=None,
-        defer_overflow=False,
         tiebreak="url",
         rank_table=_corpus_opic_rank_table(spark),
     )
@@ -1025,7 +1018,6 @@ def q_crawl_spam_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sched = PolitenessScheduler(
         default_tokens_per_round=None,
-        defer_overflow=False,
         tiebreak="url",
         rank_table=_corpus_spam_rank_table(spark),
     )
@@ -1058,7 +1050,6 @@ def q_crawl_pagerank_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # by test_uncapped_scheduler_skips_windows_and_matches_capped_order.
     sched = PolitenessScheduler(
         default_tokens_per_round=None,
-        defer_overflow=False,
         tiebreak="url",
         rank_table=_corpus_rank_table(spark),
     )
@@ -1189,8 +1180,7 @@ def q_crawl_robots_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sched = PolitenessScheduler(
         robots=robots,
-        default_tokens_per_round=1_000_000_000,
-        defer_overflow=False,
+        default_tokens_per_round=None,
         tiebreak="url",
     )
     eng = CrawlEngine(

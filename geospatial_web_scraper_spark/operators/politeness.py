@@ -12,8 +12,8 @@ deterministic per-round scheduling:
   on host + native higher-order prefix exprs; no UDF.
 * **token budgets** — ``host_budget(host, tokens_per_round int)`` with a
   default for unlisted hosts: at most that many URLs of a host are admitted
-  per round; the overflow is **deferred** to the next round (politeness
-  delays, never drops).
+  per round; deferred = every offered row the ranking did not admit, and
+  it re-enters the next round's frontier (politeness delays, never drops).
 * **priority** — geo-dataset link signals rank first (``is_geo`` from the
   extraction kernel = the 11-extension allow-list F6, plus open-data path
   patterns), tie-broken by ``url_hash`` for determinism.
@@ -25,6 +25,8 @@ split of every host — and keeps ``rank <= budget`` per salt, bounding any
 host's survivors to ``budget × n_salts``; phase B ranks the survivors
 exactly per host. Phase B's per-host input is bounded by construction, so
 the hot host can no longer dominate a partition regardless of frontier skew.
+Both phases feed one persisted ranking of every offered row; admitted and
+deferred rows are two filters of it.
 """
 
 from __future__ import annotations
@@ -55,10 +57,10 @@ def priority_expr(url: Column, is_geo: Column, depth: Column) -> Column:
 class PolitenessScheduler:
     """Plugs into CrawlEngine between dedup and seq assignment.
 
-    ``apply(df, round)`` → admitted rows carrying ``_ord1``/`_ord2``
-    (priority desc, url_hash asc) for the engine's global seq; the deferred
-    overflow is exposed as ``self.deferred`` for the engine to merge into
-    the next frontier.
+    ``apply(df, round)`` → admitted rows carrying ``_ord1``/``_ord2``
+    (priority desc, url_hash asc) for the engine's global seq; every
+    offered row it did not admit is exposed as ``self.deferred`` for the
+    engine to merge into the next frontier.
     """
 
     order_cols = ("_ord1", "_ord2")
@@ -69,11 +71,10 @@ class PolitenessScheduler:
         host_budget: DataFrame | None = None,
         default_tokens_per_round: int | None = 40,  # reference semaphore width
         n_salts: int = 8,
-        defer_overflow: bool = True,
         tiebreak: str = "url_hash",  # "url_hash" (uniform) or "url" (SQL-mirrorable)
         rank_table: DataFrame | None = None,  # (url, rank_fp) PageRank signal
         trap_templates: DataFrame | None = None,  # (host, template) denylist
-        age_boost: int = 0,  # starvation-freedom: +boost·(round − depth)
+        age_boost: int = 0,  # starvation-freedom: +boost·_wait
     ):
         """``default_tokens_per_round=None`` (with no ``host_budget``)
         means UNCAPPED: priority ORDER still applies, but no per-host
@@ -86,7 +87,6 @@ class PolitenessScheduler:
         self.host_budget = host_budget
         self.default_tokens = default_tokens_per_round
         self.n_salts = n_salts
-        self.defer_overflow = defer_overflow
         self.tiebreak = tiebreak
         if default_tokens_per_round is None and host_budget is not None:
             raise ValueError(
@@ -253,49 +253,40 @@ class PolitenessScheduler:
         # in an external SQL oracle (xxhash64 is Spark-specific)
         d = d.withColumn("_salt", F.pmod(F.col("_uh"), F.lit(self.n_salts)))
         wa = Window.partitionBy("_host", "_salt").orderBy(F.desc("_prio"), tb.asc())
-        phase_a = d.withColumn("_ra", F.row_number().over(wa)).filter(
-            F.col("_ra") <= F.col("_budget")
-        )
+        ra = d.withColumn("_ra", F.row_number().over(wa))
         wb = Window.partitionBy("_host").orderBy(F.desc("_prio"), tb.asc())
-        # the persist exists so admitted + overflow both read one ranking
-        # pass; bounded to ONE round — releasing the previous round's
-        # cache here and at crawl end (CrawlEngine calls release()) is the
-        # same single-round rule as the seen filters' probe cache
+        # ONE ranking of every offered row: phase B ranks the phase-A
+        # survivors, and the phase-A casualties join with a NULL _rb, so
+        # admitted and deferred are two filters of the one persisted frame
+        # (the oracle's lst[:budget] / lst[budget:] slices of both phases).
+        # The persist is bounded to ONE round — releasing the previous
+        # round's cache here and at crawl end (CrawlEngine calls release())
+        # is the same single-round rule as the seen filters' probe cache
         self.release()
-        ranked = phase_a.withColumn("_rb", F.row_number().over(wb)).persist()
+        ranked = (
+            ra.filter(F.col("_ra") <= F.col("_budget"))
+            .withColumn("_rb", F.row_number().over(wb))
+            .unionByName(
+                ra.filter(F.col("_ra") > F.col("_budget"))
+                .withColumn("_rb", F.lit(None).cast("int"))
+            )
+            .persist()
+        )
         self._ranked = ranked
 
-        admitted = ranked.filter(F.col("_rb") <= F.col("_budget"))
-        if self.defer_overflow:
-            # overflow candidates wait for a later round (politeness delay);
-            # phase-A casualties of the same host+salt also re-enter next
-            # round via re-extraction of their parents being unnecessary —
-            # they are deferred directly here
-            over_b = ranked.filter(F.col("_rb") > F.col("_budget"))
-            over_a = d.join(
-                phase_a.select("url", "parent_seq", "pos"),
-                ["url", "parent_seq", "pos"],
-                "left_anti",
+        admitted = F.col("_rb") <= F.col("_budget")
+        self.deferred = ranked.filter(~F.coalesce(admitted, F.lit(False))).select(
+            *df.columns
+        )
+        # aging: this exact row waited one more round (the engine
+        # initializes _wait=0 on fresh candidates when age_boost>0)
+        if self.age_boost and "_wait" in df.columns:
+            self.deferred = self.deferred.withColumn(
+                "_wait", F.coalesce(F.col("_wait"), F.lit(0)) + F.lit(1)
             )
-            self.deferred = (
-                over_b.select(*df.columns)
-                .unionByName(over_a.select(*df.columns))
-            )
-            # aging: this exact row waited one more round (the engine
-            # initializes _wait=0 on fresh candidates when age_boost>0)
-            if self.age_boost and "_wait" in df.columns:
-                self.deferred = self.deferred.withColumn(
-                    "_wait", F.coalesce(F.col("_wait"), F.lit(0)) + F.lit(1)
-                )
-        else:
-            self.deferred = None
 
-        return admitted.select(
-            *df.columns,
-            (-F.col("_prio")).alias("_ord1"),
-            (F.col("_uh") if self.tiebreak == "url_hash" else F.col("url")).alias(
-                "_ord2"
-            ),
+        return ranked.filter(admitted).select(
+            *df.columns, (-F.col("_prio")).alias("_ord1"), tb.alias("_ord2")
         )
 
     def release(self) -> None:

@@ -115,10 +115,11 @@ def budgets_from_delays(
     ``clamp(floor(round_seconds / delay), 1, default_tokens)``; hosts with
     no delay — or a zero/negative one (a 0 delay would float-divide to
     +Inf) — get ``default_tokens``. The floor is clamped to ≥1 because a
-    zero budget under ``defer_overflow`` starves that host FOREVER (its
-    candidates re-defer every round); one-per-round is the slowest honest
-    cadence. Feed straight into ``PolitenessScheduler(host_budget=…)`` —
-    the end-to-end flow is the ``crawl_crawldelay_trace`` catalog query."""
+    zero budget starves that host FOREVER (the scheduler defers every row
+    it does not admit, so its candidates re-defer every round);
+    one-per-round is the slowest honest cadence. Feed straight into
+    ``PolitenessScheduler(host_budget=…)`` — the end-to-end flow is the
+    ``crawl_crawldelay_trace`` catalog query."""
     from pyspark.sql import functions as F
 
     t = F.when(

@@ -110,6 +110,9 @@ class CrawlEngine:
         self.scheduler = scheduler
         self.max_rounds = max_rounds
         self.broadcast_fetch_limit = broadcast_fetch_limit
+        if feeds is not None and not collect_text:
+            # the C10 fold rides the text rows; without them it has no output
+            raise ValueError("feeds requires collect_text=True")
         self.feeds = feeds
         self.download_bytes = download_bytes
 
@@ -276,11 +279,7 @@ class CrawlEngine:
         # that has waited longer wins, so a replay keeps its priority
         first_order = ["parent_seq", "pos"] + ([F.desc("_wait")] if aging else [])
         # C10: the feeds table is broadcast once per crawl, not per round
-        feeds = (
-            feed_lookup(self.feeds)
-            if self.collect_text and self.feeds is not None
-            else None
-        )
+        feeds = feed_lookup(self.feeds) if self.feeds is not None else None
         rnd = start_round
         while rnd < start_round + self.max_rounds:
             if self.max_crawl is not None and recorded_total > self.max_crawl:
@@ -314,14 +313,6 @@ class CrawlEngine:
             else:
                 order_cols = ["parent_seq", "pos"]
 
-            # lazy-materialize the deduped frontier before with_global_seq's
-            # range partitioner runs its sampling job. For the plain FIFO
-            # chain shuffle reuse already absorbs the second pass (measured
-            # neutral), but when the chain holds map-side work that shuffle
-            # files don't capture — the bloom split's double UDF filter, the
-            # deferral union — the sampling job would re-run it; the
-            # checkpoint caps that at one cheap re-read of small rows.
-            new = new.localCheckpoint(eager=False)
             new_seq, n_new = with_global_seq(
                 new, order_cols, seq_col="seq", start=recorded_total
             )
@@ -407,7 +398,10 @@ class CrawlEngine:
                 next_frontier = next_frontier.withColumn(
                     "_wait", F.lit(0).cast("int")
                 )
-            # politeness deferral: host-budget overflow re-enters the frontier
+            # politeness deferral: every row the scheduler did not admit
+            # re-enters the frontier. It is a filter of the scheduler's
+            # cached ranking; the checkpoint truncates plan growth across
+            # rounds before the next apply releases that cache
             if self.scheduler is not None and self.scheduler.deferred is not None:
                 next_frontier = next_frontier.unionByName(
                     self.scheduler.deferred.select(*next_frontier.columns)

@@ -105,6 +105,18 @@ def test_crawl_texts_with_feeds_fold(spark):
     assert folded < len(got)
 
 
+def test_feeds_without_text_rejected(spark):
+    """The feeds fold only rides the text rows: asking for feeds without
+    collect_text fails at construction instead of dropping the table."""
+    with pytest.raises(ValueError, match="collect_text"):
+        CrawlEngine(
+            spark,
+            corpus.corpus_df(spark, N),
+            collect_text=False,
+            feeds=corpus.xml_docs_df(spark),
+        )
+
+
 def test_budget_cut_exact(spark, oracle_run):
     """Budget B records exactly the first B+1 of the unbudgeted total order."""
     budget = 30

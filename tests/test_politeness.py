@@ -23,8 +23,15 @@ def _run(spark, **sched_kw):
     return eng.run(corpus.seeds_df(spark, N))
 
 
-def test_per_host_cap_holds_every_round(spark):
-    run = _run(spark, default_tokens_per_round=5, n_salts=4)
+@pytest.fixture(scope="module")
+def capped_run(spark):
+    """One 12-round crawl at 5 tokens and 4 salts, shared by the cap and
+    determinism tests."""
+    return _run(spark, default_tokens_per_round=5, n_salts=4)
+
+
+def test_per_host_cap_holds_every_round(capped_run):
+    run = capped_run
     per = (
         run.trace.groupBy("round", "host")
         .agg(F.count("*").alias("n"))
@@ -92,8 +99,8 @@ def test_robots_prefix_filter(spark):
     assert any("/data/file_" in u for u in urls)
 
 
-def test_determinism(spark):
-    a = _run(spark, default_tokens_per_round=5, n_salts=4)
+def test_determinism(spark, capped_run):
+    a = capped_run
     b = _run(spark, default_tokens_per_round=5, n_salts=4)
     ta = [tuple(r) for r in a.trace.orderBy("seq").collect()]
     tb = [tuple(r) for r in b.trace.orderBy("seq").collect()]
@@ -292,7 +299,7 @@ def test_rank_table_dominates_dequeue_order(spark):
         "url string, rank_fp long",
     )
     sched = PolitenessScheduler(
-        default_tokens_per_round=100, defer_overflow=False,
+        default_tokens_per_round=100,
         tiebreak="url", rank_table=ranks,
     )
     out = sched.apply(frontier, 0)
@@ -321,11 +328,11 @@ def test_uncapped_scheduler_skips_windows_and_matches_capped_order(spark):
         " pos int, is_geo boolean",
     )
     capped = PolitenessScheduler(
-        default_tokens_per_round=1_000_000_000, defer_overflow=False,
+        default_tokens_per_round=1_000_000_000,
         tiebreak="url",
     ).apply(frontier, 0)
     unc_sched = PolitenessScheduler(
-        default_tokens_per_round=None, defer_overflow=False, tiebreak="url",
+        default_tokens_per_round=None, tiebreak="url",
     )
     uncapped = unc_sched.apply(frontier, 0)
     a = [tuple(r) for r in capped.orderBy("_ord1", "_ord2").collect()]
@@ -360,6 +367,47 @@ def test_scheduler_rank_cache_is_single_round(spark):
     assert not r1.is_cached, "previous round's ranking cache not released"
     sched.release()
     assert sched._ranked is None
+
+
+def test_deferred_is_a_filter_of_the_ranking(spark):
+    """Admitted and deferred rows are two filters of the one persisted
+    ranking: the deferred plan reads the cached ranking and runs no join,
+    and the two sets split the offered rows exactly."""
+    rows = [
+        (f"https://h{i % 2}.org/{'data/' if i % 3 else ''}p{i}.html",
+         i % 4, None, -1, i, i % 5 == 0)
+        for i in range(40)
+    ]
+    frontier = spark.createDataFrame(
+        rows,
+        "url string, depth int, parent_url string, parent_seq long,"
+        " pos int, is_geo boolean",
+    )
+    sched = PolitenessScheduler(default_tokens_per_round=3, n_salts=4)
+    admitted = {r["url"] for r in sched.apply(frontier, 0).collect()}
+    deferred_df = sched.deferred
+    deferred = [r["url"] for r in deferred_df.collect()]
+    plan = deferred_df._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan
+    assert "InMemoryRelation" in plan, plan
+    assert len(admitted) == 6  # 3 tokens × 2 hosts
+    assert len(deferred) == len(set(deferred)) == 34
+    assert admitted.isdisjoint(deferred)
+    assert admitted | set(deferred) == {r[0] for r in rows}
+    sched.release()
+    # with a budget table the two branches share phase A's exchange (a
+    # literal budget lets Spark pre-limit the survivors' shuffle instead)
+    budgets = spark.createDataFrame(
+        [("h0.org", 3)], "host string, tokens_per_round int"
+    )
+    tabled = PolitenessScheduler(
+        host_budget=budgets, default_tokens_per_round=3, n_salts=4
+    )
+    tabled.apply(frontier, 0)
+    assert tabled._ranked.count() == 40
+    ranked_plan = tabled._ranked._jdf.queryExecution().executedPlan().toString()
+    assert "ReusedExchange" in ranked_plan, ranked_plan
+    tabled.release()
 
 
 # ---------------------------------------------------------------------------
@@ -398,7 +446,6 @@ def test_age_boost_zero_scheduler_matches_plain(spark):
 
     sched = Recording(
         default_tokens_per_round=2,
-        defer_overflow=True,
         tiebreak="url",
         age_boost=0,
     )

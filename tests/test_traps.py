@@ -75,7 +75,7 @@ def test_scheduler_trap_denylist_drops_not_defers(spark):
         [("trap.org", "/cal/N/N/N")], "host string, template string"
     )
     sched = PolitenessScheduler(
-        default_tokens_per_round=10, defer_overflow=True, tiebreak="url",
+        default_tokens_per_round=10, tiebreak="url",
         trap_templates=deny,
     )
     admitted = {r["url"] for r in sched.apply(frontier, 0).collect()}
