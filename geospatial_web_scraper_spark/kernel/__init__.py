@@ -5,6 +5,8 @@ from .html_kernel import (  # noqa: F401
     extract_metadata,
     extract_metadata_raw,
     extract_metadata_with_feeds,
+    extract_page,
+    finish_metadata,
     go_path_base,
     go_path_ext,
     parse_html,

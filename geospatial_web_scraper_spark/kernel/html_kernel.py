@@ -192,7 +192,8 @@ def _should_skip_meta(node: Node) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Link extraction (VisitNode semantics, crawler.go:97-131)
+# One-pass extraction: links (VisitNode semantics, crawler.go:97-131) and
+# metadata (ExtractMetadata, metadata.go:40-220) from one tokenizer loop
 # ---------------------------------------------------------------------------
 
 
@@ -208,15 +209,16 @@ def _attrs_unwanted(attrs) -> bool:
     return False
 
 
-# One-pass tag tokenizer for the link scanner. Comments / CDATA / doctype /
-# processing instructions are consumed without producing a tag; start and
-# end tags capture (end-slash, name, attr soup, self-close slash). Quoted
-# '>' inside attribute values is protected by the quote alternatives; the
-# attr soup is lazy so the trailing "/" of a self-closing tag lands in the
+# One-pass tag tokenizer shared by links and metadata. Comments / CDATA /
+# doctype / processing instructions are consumed without producing a tag
+# (a comment closes at html.parser's ``--\s*>``); start and end tags
+# capture (end-slash, name, attr soup, self-close slash). Quoted '>' inside
+# attribute values is protected by the quote alternatives; the attr soup
+# is lazy so the trailing "/" of a self-closing tag lands in the
 # self-close group.
 _TAG_RE = re.compile(
     r"<(?:"
-    r"!--.*?(?:-->|\Z)"
+    r"!--.*?(?:--\s*>|\Z)"
     r"|!\[CDATA\[.*?(?:\]\]>|\Z)"
     r"|![^>]*>?"
     r"|\?[^>]*>?"
@@ -227,10 +229,15 @@ _TAG_RE = re.compile(
 _ATTR_RE = re.compile(
     r"([^\s=/>]+)(?:\s*=\s*(\"[^\"]*\"|'[^']*'|[^\s>]*))?"
 )
+# script/style bodies are one CDATA chunk that ends only at a complete
+# end tag — html.parser's ``</\s*script\s*>`` (re.I); "</scriptx>" is data
 _CDATA_END = {
-    "script": re.compile(r"(?i)</script"),
-    "style": re.compile(r"(?i)</style"),
+    "script": re.compile(r"</\s*script\s*>", re.I),
+    "style": re.compile(r"</\s*style\s*>", re.I),
 }
+_COMMENT_CLOSE_RE = re.compile(r"--\s*>")
+_META_GATE_TAGS = frozenset(UNWANTED_META)
+_META_ATTR_TAGS = frozenset({"meta", "link", "script"})
 
 # A trailing "/" before ">" is a self-close ONLY when it is not the
 # continuation of an unquoted attribute value: html.parser's
@@ -262,8 +269,219 @@ def _parse_attrs(src: str) -> list[tuple[str, str]]:
     return attrs
 
 
+def _meta_attrs_unwanted(attrs) -> bool:
+    """The attribute half of :func:`_should_skip_meta` on raw pairs."""
+    for key, val in attrs:
+        if key in ("class", "id", "role") and val:
+            low = val.lower()
+            for sub in UNWANTED_META:
+                if sub in low:
+                    return True
+    return False
+
+
+def _unterminated(markup: str) -> bool:
+    """A comment / declaration / PI that ran into the end of the page —
+    html.parser turns it into text, the tokenizer does not."""
+    if markup.startswith("<!--"):
+        return _COMMENT_CLOSE_RE.search(markup, 4) is None
+    return not markup.endswith(">")
+
+
+def _link_of(val: str, base_url: str) -> tuple[str, bool] | None:
+    """One ``<a href>`` value → (resolved url, is_geo), or None for
+    ``mailto:``/``tel:`` and unresolvable hrefs."""
+    if val.startswith("mailto:") or val.startswith("tel:"):
+        return None
+    try:
+        link = urljoin(base_url, val)
+        path = urlsplit(link).path
+    except ValueError:
+        return None
+    return link, go_path_ext(path).lower() in GEO_FILE_EXTENSIONS
+
+
+def extract_page(html: str | bytes, base_url: str, *, links: bool = True,
+                 text: bool = True) -> tuple[list[dict] | None, tuple | None]:
+    """Links and raw metadata of one page from ONE tokenizer pass.
+
+    Returns ``(links, meta)``: ``links`` is what :func:`extract_links`
+    returns (``None`` when ``links=False``), ``meta`` is
+    :func:`extract_metadata_raw`'s ``(title_buf, desc_buf, keywords,
+    xml_links)`` (``None`` when ``text=False``).
+
+    The element stack mirrors :class:`_TreeBuilder`'s algebra exactly (void
+    elements and ``<x/>`` never push; end tags pop to the nearest matching
+    open frame, unmatched ones are ignored) and carries two suppression
+    frames: the crawl gate (``UNWANTED_CLASS_OR_ID`` on class/id) and the
+    metadata gate (``UNWANTED_META`` on the tag name or class/id/role).
+    Tags are dead for a mode until its frame pops; a mode that is off is
+    suppressed at frame 0, the document, which never pops. Because the
+    tree walk is pre-order and the tree is built in event order, document
+    order IS walk order, so the metadata accumulates as tags stream by:
+
+    * ``<title>`` takes its first child — the text, or an element's tag
+      name (Go's ``FirstChild.Data``);
+    * text counts only when its direct parent is in
+      ``VISIBLE_TEXT_PARENTS``, one chunk per run between tags,
+      entity-unescaped per chunk (html.parser's ``convert_charrefs``);
+    * script/style bodies are one raw CDATA chunk; an ld+json script's
+      body is parsed as JSON, every other script is skipped.
+
+    A ``<`` that opens no tag splits html.parser's text into extra chunks,
+    a comment or declaration cut off by the end of the page becomes text
+    there, and ``<![`` sections follow rules of their own; the tokenizer
+    does not model those, so such a page's metadata comes from the tree
+    walk (its links still come from this pass).
+
+    Output equality with the tree twins (:func:`extract_links_tree`,
+    :func:`extract_metadata_raw`) is pinned by tests over the corpus, an
+    adversarial list and a differential fuzz test. One pass instead of a
+    tokenizer pass plus an html.parser tree build and walk is what keeps
+    the round's Arrow extraction stage from being parse-bound."""
+    if isinstance(html, (bytes, bytearray)):
+        html = html.decode("utf-8", errors="replace")
+    out: list[dict] | None = [] if links else None
+    stack: list[str] = ["\x00"]
+    link_off: int | None = None if links else 0
+    meta_off: int | None = None if text else 0
+    tree_meta = False  # an unmodelled construct: the tree walk does text
+    title_buf = desc_buf = ""
+    keywords: list[str] = []
+    xml_links: list[str] = []
+    title_open = False  # an active <title> still waits for its first child
+    pos = 0
+    n = len(html)
+    # hot loop: one group(1,2,3,4) call per tag and the search method bound
+    # once — the loop is otherwise at CPython's per-iteration floor
+    tag_search = _TAG_RE.search
+    while pos < n:
+        m = tag_search(html, pos)
+        start = n if m is None else m.start()
+        if start > pos and meta_off is None:  # one text chunk
+            if html.find("<", pos, start) >= 0:
+                tree_meta, meta_off = True, 0
+                if out is None:
+                    break
+            elif title_open or stack[-1] in VISIBLE_TEXT_PARENTS:
+                chunk = html[pos:start]
+                if "&" in chunk:
+                    chunk = _html_unescape(chunk)
+                if chunk:  # charrefs may unescape to nothing: no node
+                    if title_open:
+                        title_buf = add_to_stringbuilder(title_buf, chunk)
+                        title_open = False
+                    else:
+                        desc_buf = add_to_stringbuilder(desc_buf, chunk)
+        if m is None:
+            break
+        pos = m.end()
+        is_end, name, attr_src, self_close_mark = m.group(1, 2, 3, 4)
+        if name is None:  # comment / doctype / CDATA / PI
+            if meta_off is None and (
+                html.startswith("<![", start)
+                or (pos == n and _unterminated(m.group()))
+            ):
+                tree_meta, meta_off = True, 0
+                if out is None:
+                    break
+            continue
+        tag = name.lower()
+        if is_end:  # end tag
+            for i in range(len(stack) - 1, 0, -1):
+                if stack[i] == tag:
+                    del stack[i:]
+                    if link_off is not None and link_off >= i:
+                        link_off = None
+                    if meta_off is not None and meta_off >= i:
+                        meta_off = None
+                    title_open = False
+                    break
+            continue
+        self_closing = bool(self_close_mark)
+        if self_closing and attr_src:
+            # HTMLParser parity (see _UNQ_*_RE): the "/" extends an unquoted
+            # attribute value unless whitespace closed the value first — but
+            # a pending "=" claims the slash as its value even after spaces.
+            if _UNQ_PENDING_RE.search(attr_src) or (
+                m.start(4) == m.end(3) and _UNQ_VALUE_RE.search(attr_src)
+            ):
+                attr_src += "/"
+                self_closing = False
+        link_gated = meta_gated = ld_json = False
+        if link_off is None or meta_off is None:  # a live region
+            link_on = link_off is None
+            meta_on = meta_off is None
+            attrs = None
+            if attr_src:
+                low = attr_src.lower()
+                if (
+                    "class" in low
+                    or "id" in low
+                    or (link_on and tag == "a")
+                    or (meta_on and (tag in _META_ATTR_TAGS or "role" in low))
+                ):
+                    attrs = _parse_attrs(attr_src)
+            link_gated = link_on and attrs is not None and _attrs_unwanted(attrs)
+            if link_on and not link_gated and tag == "a" and attrs:
+                for key, val in attrs:
+                    if key == "href":
+                        hit = _link_of(val, base_url)
+                        if hit is not None:
+                            out.append(
+                                {"url": hit[0], "is_geo": hit[1], "pos": len(out)}
+                            )
+            if meta_on:
+                if title_open:  # this element is the title's first child
+                    title_buf = add_to_stringbuilder(title_buf, tag)
+                    title_open = False
+                meta_gated = tag in _META_GATE_TAGS or (
+                    attrs is not None and _meta_attrs_unwanted(attrs)
+                )
+                if not meta_gated and attrs:
+                    if tag == "meta":
+                        title_buf, desc_buf, keywords = _fold_meta(
+                            attrs, title_buf, desc_buf, keywords
+                        )
+                    elif tag == "link":
+                        href = _xml_href(attrs)
+                        if href is not None:
+                            xml_links.append(href)
+                    elif tag == "script":
+                        ld_json = "ld+json" in _script_type(attrs)
+        if self_closing or tag in _VOID:
+            continue
+        stack.append(tag)
+        if link_gated:
+            link_off = len(stack) - 1
+        if meta_gated:
+            meta_off = len(stack) - 1
+        elif meta_off is None and tag == "title":
+            title_open = True
+        if tag in _CDATA_END:  # script/style bodies are data
+            mm = _CDATA_END[tag].search(html, pos)
+            if mm is None:
+                break  # unterminated: html.parser never emits the body
+            if ld_json and mm.start() > pos:
+                title_buf, desc_buf, keywords = _fold_ld_json(
+                    html[pos : mm.start()], title_buf, desc_buf, keywords
+                )
+            pos = mm.end()
+            del stack[-1]
+            if link_off == len(stack):
+                link_off = None
+            if meta_off == len(stack):
+                meta_off = None
+    if not text:
+        return out, None
+    if tree_meta:
+        return out, extract_metadata_raw(html, base_url)
+    return out, (title_buf, desc_buf, keywords, xml_links)
+
+
 def extract_links(html: str | bytes, base_url: str) -> list[dict]:
-    """Emits links in document order — the hot-path scanner.
+    """Emits links in document order — the hot-path scanner
+    (:func:`extract_page`'s links-only mode).
 
     Each emitted dict: ``{"url": resolved, "is_geo": bool, "pos": int}``.
     Semantics (SURVEY.md §8.1):
@@ -277,88 +495,9 @@ def extract_links(html: str | bytes, base_url: str) -> list[dict]:
       class/id is never emitted);
     * depth gating (``parent.Depth+1 < 4``) is applied engine-side, not here.
 
-    Implementation: single regex pass, no DOM. The element stack mirrors
-    :class:`_TreeBuilder`'s algebra exactly (void elements never push; end
-    tags pop to the nearest matching open frame, unmatched ones are
-    ignored) and an unwanted-class/id element marks its stack frame as the
-    suppression point — tags are dead until that frame pops. script/style
-    bodies are skipped as CDATA. Output equality with the tree walk
-    (:func:`extract_links_tree`) is pinned by tests over the full corpus
-    and an adversarial-input list; ~5× faster than the html.parser event
-    loop, which is the difference between the Arrow extraction stage being
-    parse-bound or not."""
-    if isinstance(html, (bytes, bytearray)):
-        html = html.decode("utf-8", errors="replace")
-    out: list[dict] = []
-    stack: list[str] = ["\x00"]
-    suppress_from: int | None = None
-    pos = 0
-    n = len(html)
-    # hot loop: one group(1,2,3,4) call per tag instead of four and the
-    # search method bound once (a few percent at ~500 tags/page — the
-    # loop is otherwise at CPython's per-iteration floor, ~1.3 µs/tag)
-    tag_search = _TAG_RE.search
-    while pos < n:
-        m = tag_search(html, pos)
-        if m is None:
-            break
-        pos = m.end()
-        is_end, name, attr_src, self_close_mark = m.group(1, 2, 3, 4)
-        if name is None:
-            continue  # comment / doctype / CDATA / PI
-        tag = name.lower()
-        if is_end:  # end tag
-            for i in range(len(stack) - 1, 0, -1):
-                if stack[i] == tag:
-                    del stack[i:]
-                    if suppress_from is not None and suppress_from >= i:
-                        suppress_from = None
-                    break
-            continue
-        self_closing = bool(self_close_mark)
-        if self_closing and attr_src:
-            # HTMLParser parity (see _UNQ_*_RE): the "/" extends an unquoted
-            # attribute value unless whitespace closed the value first — but
-            # a pending "=" claims the slash as its value even after spaces.
-            if _UNQ_PENDING_RE.search(attr_src) or (
-                m.start(4) == m.end(3) and _UNQ_VALUE_RE.search(attr_src)
-            ):
-                attr_src += "/"
-                self_closing = False
-        active = suppress_from is None
-        attrs = None
-        if active and attr_src:
-            low = attr_src.lower()
-            if tag == "a" or "class" in low or "id" in low:
-                attrs = _parse_attrs(attr_src)
-        unwanted = attrs is not None and _attrs_unwanted(attrs)
-        if active and not unwanted and tag == "a" and attrs:
-            for key, val in attrs:
-                if key != "href":
-                    continue
-                if val.startswith("mailto:") or val.startswith("tel:"):
-                    continue
-                try:
-                    link = urljoin(base_url, val)
-                    path = urlsplit(link).path
-                except ValueError:
-                    continue
-                ext = go_path_ext(path).lower()
-                out.append(
-                    {
-                        "url": link,
-                        "is_geo": ext in GEO_FILE_EXTENSIONS,
-                        "pos": len(out),
-                    }
-                )
-        if not self_closing and tag not in _VOID:
-            stack.append(tag)
-            if unwanted:
-                suppress_from = len(stack) - 1
-            if tag in _CDATA_END:  # script/style bodies are data
-                mm = _CDATA_END[tag].search(html, pos)
-                pos = mm.start() if mm else n
-    return out
+    Output equality with the tree walk (:func:`extract_links_tree`) is
+    pinned by tests over the full corpus and an adversarial-input list."""
+    return extract_page(html, base_url, links=True, text=False)[0]
 
 
 def extract_links_tree(html: str | bytes, base_url: str) -> list[dict]:
@@ -417,13 +556,81 @@ def _ws_normalize(s: str) -> str:
     return " ".join(s.split())
 
 
+def _fold_meta(attrs, title_buf: str, desc_buf: str, keywords: list):
+    """One ``<meta>`` element: ``name`` (else
+    ``property``) picks the buffer its ``content`` folds into."""
+    name = prop = content = ""
+    for key, val in attrs:
+        if key == "name":
+            name = val.lower()
+        elif key == "property":
+            prop = val.lower()
+        elif key == "content":
+            content = val.strip()
+    key = name or prop
+    if key in ("description", "og:description"):
+        desc_buf = add_to_stringbuilder(desc_buf, content)
+    elif key == "keywords":
+        if not keywords and content != "":
+            keywords = [p.strip() for p in content.split(",")]
+    elif key in ("og:title", "headline"):
+        title_buf = add_to_stringbuilder(title_buf, content)
+    return title_buf, desc_buf, keywords
+
+
+def _script_type(attrs) -> str:
+    """The first ``type`` attribute, lowercased."""
+    for key, val in attrs:
+        if key == "type":
+            return val.lower()
+    return ""
+
+
+def _fold_ld_json(payload: str, title_buf: str, desc_buf: str, keywords: list):
+    """One ld+json script body: a JSON object's
+    string ``description``/``name``/``headline``/``keywords`` fold in."""
+    try:
+        data = json.loads(payload)
+    except (ValueError, TypeError):
+        data = None
+    if isinstance(data, dict):
+        d = data.get("description")
+        if isinstance(d, str):
+            desc_buf = add_to_stringbuilder(desc_buf, d)
+        t = data.get("name")
+        if isinstance(t, str):
+            title_buf = add_to_stringbuilder(title_buf, t)
+        h = data.get("headline")
+        if isinstance(h, str):
+            title_buf = add_to_stringbuilder(title_buf, h)
+        kw = data.get("keywords")
+        if isinstance(kw, str) and not keywords:
+            keywords = [p.strip() for p in kw.split(",")]
+    return title_buf, desc_buf, keywords
+
+
+def _xml_href(attrs) -> str | None:
+    """A ``<link>``'s href when its (last) ``type`` mentions xml."""
+    href = typ = ""
+    for key, val in attrs:
+        if key == "href":
+            href = val
+        elif key == "type":
+            typ = val.lower()
+    return href if "xml" in typ else None
+
+
 def extract_metadata_raw(html: str | bytes, page_url: str) -> tuple:
-    """The metadata walk, returning the PRE-normalization state
+    """The metadata tree walk, returning the PRE-normalization state
     ``(title_buf, desc_buf, keywords, xml_links)`` — the exact accumulator
     values the reference holds at ``metadata.go:179`` (just before the
-    secondary XML harvest). :func:`extract_metadata` normalizes these;
-    :func:`extract_metadata_with_feeds` folds feed titles/descriptions in
-    first, because the reference's fold operates on the raw builders."""
+    secondary XML harvest). :func:`finish_metadata` normalizes these, after
+    the feeds fold when there is one, because the reference's fold operates
+    on the raw builders.
+
+    This is the frozen twin of :func:`extract_page`'s text mode (the way
+    :func:`extract_links_tree` is the twin of its links mode): the oracle
+    and the tests use it, the engine uses the one-pass tokenizer."""
     root = parse_html(html)
     title_buf = ""
     desc_buf = ""
@@ -446,60 +653,21 @@ def extract_metadata_raw(html: str | bytes, page_url: str) -> tuple:
                         title_buf, first.text if first.type == TEXT else first.tag
                     )
             elif tag == "meta":
-                name = prop = content = ""
-                for key, val in n.attrs:
-                    k = key.lower()
-                    if k == "name":
-                        name = val.lower()
-                    elif k == "property":
-                        prop = val.lower()
-                    elif k == "content":
-                        content = val.strip()
-                key = name or prop
-                if key in ("description", "og:description"):
-                    desc_buf = add_to_stringbuilder(desc_buf, content)
-                elif key == "keywords":
-                    if not keywords and content != "":
-                        keywords = [p.strip() for p in content.split(",")]
-                elif key in ("og:title", "headline"):
-                    title_buf = add_to_stringbuilder(title_buf, content)
+                title_buf, desc_buf, keywords = _fold_meta(
+                    n.attrs, title_buf, desc_buf, keywords
+                )
             elif tag == "script":
-                typ = ""
-                for key, val in n.attrs:
-                    if key.lower() == "type":
-                        typ = val.lower()
-                        break
-                if "ld+json" not in typ:
+                if "ld+json" not in _script_type(n.attrs):
                     return  # skip subtree (metadata.go:128)
                 if not n.children:
                     return
                 payload = n.children[0].text if n.children[0].type == TEXT else ""
-                try:
-                    data = json.loads(payload)
-                except (ValueError, TypeError):
-                    data = None
-                if isinstance(data, dict):
-                    d = data.get("description")
-                    if isinstance(d, str):
-                        desc_buf = add_to_stringbuilder(desc_buf, d)
-                    t = data.get("name")
-                    if isinstance(t, str):
-                        title_buf = add_to_stringbuilder(title_buf, t)
-                    h = data.get("headline")
-                    if isinstance(h, str):
-                        title_buf = add_to_stringbuilder(title_buf, h)
-                    kw = data.get("keywords")
-                    if isinstance(kw, str) and not keywords:
-                        keywords = [p.strip() for p in kw.split(",")]
+                title_buf, desc_buf, keywords = _fold_ld_json(
+                    payload, title_buf, desc_buf, keywords
+                )
             elif tag == "link":
-                href = typ = ""
-                for key, val in n.attrs:
-                    k = key.lower()
-                    if k == "href":
-                        href = val
-                    elif k == "type":
-                        typ = val.lower()
-                if "xml" in typ:
+                href = _xml_href(n.attrs)
+                if href is not None:
                     xml_links.append(href)
         elif n.type == TEXT:
             parent_tag = n.parent.tag if n.parent is not None else ""
@@ -511,6 +679,43 @@ def extract_metadata_raw(html: str | bytes, page_url: str) -> tuple:
 
     walk(root)
     return title_buf, desc_buf, keywords, xml_links
+
+
+def finish_metadata(raw: tuple, page_url: str, feed_fetch=None) -> dict:
+    """Raw metadata ``(title_buf, desc_buf, keywords, xml_links)`` →
+    ``{"title", "description", "keywords", "xml_links"}``.
+
+    With ``feed_fetch`` the secondary XML harvest (``metadata.go:180-212``)
+    runs first, the 5s-timeout HTTP GET replaced by the offline
+    ``feed_fetch(resolved_url) -> xml_text | None`` lookup (``None`` =
+    fetch error / timeout → link skipped, exactly the reference's
+    ``continue``). Quirk frozen: the reference guards the fold with
+    ``md.Title == ""`` / ``md.Description == ""`` — but those fields are
+    only assigned AFTER the loop (``metadata.go:215-216``), so the guards
+    are always true and every successfully-parsed feed's title/description
+    goes through ``add_to_stringbuilder`` unconditionally, on the RAW
+    buffers, before whitespace normalization."""
+    title_buf, desc_buf, keywords, xml_links = raw
+    if feed_fetch is not None:
+        for href in xml_links:
+            try:
+                u = urljoin(page_url, href)
+            except ValueError:
+                continue  # base.Parse error (metadata.go:184-186)
+            xml_text = feed_fetch(u)
+            if xml_text is None:
+                continue  # fetch error / timeout (metadata.go:189-199)
+            parsed = parse_xml_meta(xml_text)
+            if parsed is None:
+                continue  # Unmarshal error (metadata.go:204)
+            title_buf = add_to_stringbuilder(title_buf, parsed["title"])
+            desc_buf = add_to_stringbuilder(desc_buf, parsed["description"])
+    return {
+        "title": _ws_normalize(title_buf),
+        "description": _ws_normalize(desc_buf),
+        "keywords": keywords,
+        "xml_links": xml_links,
+    }
 
 
 def extract_metadata(html: str | bytes, page_url: str) -> dict:
@@ -532,15 +737,11 @@ def extract_metadata(html: str | bytes, page_url: str) -> dict:
       side-effect; its offline form is :func:`extract_metadata_with_feeds`).
 
     Returns ``{"title", "description", "keywords", "xml_links"}`` where
-    ``description`` is *the* byte-identical extracted text per url.
+    ``description`` is *the* byte-identical extracted text per url. Built
+    on the tree twin (:func:`extract_metadata_raw`) — the oracle's path;
+    the engine and the catalog UDFs run :func:`extract_page`.
     """
-    title_buf, desc_buf, keywords, xml_links = extract_metadata_raw(html, page_url)
-    return {
-        "title": _ws_normalize(title_buf),
-        "description": _ws_normalize(desc_buf),
-        "keywords": keywords,
-        "xml_links": xml_links,
-    }
+    return finish_metadata(extract_metadata_raw(html, page_url), page_url)
 
 
 # ---------------------------------------------------------------------------
@@ -588,34 +789,8 @@ def extract_metadata_with_feeds(
     html: str | bytes, page_url: str, feed_fetch
 ) -> dict:
     """Full ``ExtractMetadata`` INCLUDING the secondary XML harvest
-    (``metadata.go:180-212``), with the 5s-timeout HTTP GET replaced by the
-    offline ``feed_fetch(resolved_url) -> xml_text | None`` lookup
-    (``None`` = fetch error / timeout → link skipped, exactly the
-    reference's ``continue``).
-
-    Quirk frozen: the reference guards the fold with ``md.Title == ""`` /
-    ``md.Description == ""`` — but those fields are only assigned AFTER the
-    loop (``metadata.go:215-216``), so the guards are always true and every
-    successfully-parsed feed's title/description goes through
-    ``add_to_stringbuilder`` unconditionally, on the RAW buffers, before
-    whitespace normalization."""
-    title_buf, desc_buf, keywords, xml_links = extract_metadata_raw(html, page_url)
-    for href in xml_links:
-        try:
-            u = urljoin(page_url, href)
-        except ValueError:
-            continue  # base.Parse error (metadata.go:184-186)
-        xml_text = feed_fetch(u)
-        if xml_text is None:
-            continue  # fetch error / timeout (metadata.go:189-199)
-        parsed = parse_xml_meta(xml_text)
-        if parsed is None:
-            continue  # Unmarshal error (metadata.go:204)
-        title_buf = add_to_stringbuilder(title_buf, parsed["title"])
-        desc_buf = add_to_stringbuilder(desc_buf, parsed["description"])
-    return {
-        "title": _ws_normalize(title_buf),
-        "description": _ws_normalize(desc_buf),
-        "keywords": keywords,
-        "xml_links": xml_links,
-    }
+    (``metadata.go:180-212``) on the tree twin — see
+    :func:`finish_metadata` for the fold and its frozen quirk."""
+    return finish_metadata(
+        extract_metadata_raw(html, page_url), page_url, feed_fetch
+    )

@@ -11,7 +11,9 @@ byte-identical extracted text per url.
 
 ``extract_round_outputs`` is the crawl engine's fused per-round pass:
 downloads, links, texts (with the optional C10 feeds fold) and
-per-partition lineage out of ONE Arrow scan of the fetched pages.
+per-partition lineage out of ONE Arrow scan of the fetched pages, and
+links and text out of ONE tokenizer pass per page
+(``kernel.extract_page``).
 
 All delegate per-document work to the shared pure-Python kernel
 (:mod:`..kernel`), which the single-threaded oracle also uses — Spark adds
@@ -25,11 +27,7 @@ from pyspark import TaskContext
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernel import (
-    extract_links,
-    extract_metadata,
-    extract_metadata_with_feeds,
-)
+from ..kernel import extract_links, extract_page, finish_metadata
 
 LINK_TYPE = T.ArrayType(
     T.StructType(
@@ -73,7 +71,7 @@ def extract_xml_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
         if h is None or u is None:
             out.append([])
             continue
-        out.append(extract_metadata(bytes(h), u)["xml_links"])
+        out.append(extract_page(bytes(h), u, links=False)[1][3])
     return pd.Series(out, dtype=object)
 
 
@@ -86,7 +84,7 @@ def extract_meta_udf(html: pd.Series, base_url: pd.Series) -> pd.DataFrame:
             descs.append(None)
             kws.append(None)
             continue
-        md = extract_metadata(bytes(h), u)
+        md = finish_metadata(extract_page(bytes(h), u, links=False)[1], u)
         titles.append(md["title"])
         descs.append(md["description"])
         kws.append(md["keywords"])
@@ -123,10 +121,11 @@ def extract_meta_with_feeds(pages, feeds, html_col: str = "html",
 
     Distributed shape: the feeds table is broadcast once as a
     ``{url: xml}`` dict (:func:`feed_lookup`) and ONE Arrow pass over the
-    pages runs the kernel fold (``kernel.extract_metadata_with_feeds``,
-    shared with the oracle) per page, resolving each xml href and looking
-    it up in place. No join, no shuffle: the pass inherits the pages
-    scan's partitioning, so HTML bytes never move."""
+    pages runs the one-pass text extraction and the kernel fold
+    (``kernel.finish_metadata``, shared with the oracle) per page,
+    resolving each xml href and looking it up in place. No join, no
+    shuffle: the pass inherits the pages scan's partitioning, so HTML
+    bytes never move."""
     lookup = feed_lookup(feeds)
 
     def gen(batches):
@@ -136,7 +135,8 @@ def extract_meta_with_feeds(pages, feeds, html_col: str = "html",
             for u, h in zip(pdf[url_col], pdf[html_col]):
                 if h is None or u is None:
                     continue
-                md = extract_metadata_with_feeds(bytes(h), u, feed_fetch)
+                raw = extract_page(bytes(h), u, links=False)[1]
+                md = finish_metadata(raw, u, feed_fetch)
                 urls.append(u)
                 titles.append(md["title"])
                 descs.append(md["description"])
@@ -241,10 +241,17 @@ def extract_round_outputs(fetched, geo_mime_types, max_depth: int,
     ``kind=1`` link rows in document order; everything else (404s, fetch
     leaves) emits no row of its own.
 
+    Each html row is tokenized ONCE: one ``kernel.extract_page`` call
+    yields the page's links and its raw metadata together. It asks for
+    text only when ``collect_text`` is on and for links only when the
+    depth gate passes, so a page that needs neither is never parsed. The
+    oracle takes its texts from the tree walk (``extract_metadata``);
+    the kernel's twin tests pin the two equal.
+
     ``feeds`` is an optional broadcast ``{url: xml}`` dict
     (:func:`feed_lookup`): with it, ``kind=2`` rows run the C10 fold
-    (``kernel.extract_metadata_with_feeds``, the RSS/Atom harvest of
-    ``metadata.go:180-212``) instead of the plain metadata walk.
+    (``kernel.finish_metadata``, the RSS/Atom harvest of
+    ``metadata.go:180-212``) on the same raw buffers.
 
     Every partition that saw fetched rows ends with one ``kind=3`` summary
     row: its ``partition_id``, the rows it fetched (``urls_fetched``, all
@@ -310,21 +317,17 @@ def extract_round_outputs(fetched, geo_mime_types, max_depth: int,
                     continue
                 depth = col_depth.iloc[ridx]
                 h = col_html.iloc[ridx]
-                if h is None:
+                want_links = depth + 1 < max_depth
+                if h is None or not (want_links or collect_text):
                     continue
                 seq = col_seq.iloc[ridx]
+                links, raw = extract_page(bytes(h), u, links=want_links,
+                                          text=collect_text)
                 if collect_text:
-                    md = (
-                        extract_metadata(bytes(h), u)
-                        if feed_fetch is None
-                        else extract_metadata_with_feeds(bytes(h), u, feed_fetch)
-                    )
+                    md = finish_metadata(raw, u, feed_fetch)
                     emit(u, seq, depth, 2,
                          title=md["title"], text=md["description"])
-                if depth + 1 >= max_depth:
-                    continue
-                links = extract_links(bytes(h), u)
-                for link in links:
+                for link in links or ():
                     emit(u, seq, depth, 1, l_url=link["url"],
                          l_pos=link["pos"], l_geo=link["is_geo"])
             nulls = [None] * len(urls)

@@ -25,8 +25,9 @@ split of every host — and keeps ``rank <= budget`` per salt, bounding any
 host's survivors to ``budget × n_salts``; phase B ranks the survivors
 exactly per host. Phase B's per-host input is bounded by construction, so
 the hot host can no longer dominate a partition regardless of frontier skew.
-Both phases feed one persisted ranking of every offered row; admitted and
-deferred rows are two filters of it.
+Both phases feed one persisted ranking of every offered row (one window
+each, so one exchange each); admitted and deferred rows are two filters
+of it.
 """
 
 from __future__ import annotations
@@ -254,24 +255,27 @@ class PolitenessScheduler:
         d = d.withColumn("_salt", F.pmod(F.col("_uh"), F.lit(self.n_salts)))
         wa = Window.partitionBy("_host", "_salt").orderBy(F.desc("_prio"), tb.asc())
         ra = d.withColumn("_ra", F.row_number().over(wa))
-        wb = Window.partitionBy("_host").orderBy(F.desc("_prio"), tb.asc())
         # ONE ranking of every offered row: phase B ranks the phase-A
-        # survivors, and the phase-A casualties join with a NULL _rb, so
-        # admitted and deferred are two filters of the one persisted frame
-        # (the oracle's lst[:budget] / lst[budget:] slices of both phases).
+        # survivors per host, and the phase-A casualties ride the same
+        # window with a NULL _rb, so admitted and deferred are two filters
+        # of the one persisted frame (the oracle's lst[:budget] /
+        # lst[budget:] slices of both phases). Casualties stay split by
+        # (host, salt), so no phase-B group outgrows budget × n_salts or
+        # one phase-A group. One window over all rows, not a filter and a
+        # union: a filter on _ra <= literal budget lets Spark's
+        # window-group-limit rewrite pre-limit one branch, and phase A's
+        # exchange then runs twice.
         # The persist is bounded to ONE round — releasing the previous
         # round's cache here and at crawl end (CrawlEngine calls release())
         # is the same single-round rule as the seen filters' probe cache
         self.release()
-        ranked = (
-            ra.filter(F.col("_ra") <= F.col("_budget"))
-            .withColumn("_rb", F.row_number().over(wb))
-            .unionByName(
-                ra.filter(F.col("_ra") > F.col("_budget"))
-                .withColumn("_rb", F.lit(None).cast("int"))
-            )
-            .persist()
-        )
+        survives = F.col("_ra") <= F.col("_budget")
+        wb = Window.partitionBy(
+            "_host", F.when(~survives, F.col("_salt"))
+        ).orderBy(F.desc("_prio"), tb.asc())
+        ranked = ra.withColumn(
+            "_rb", F.when(survives, F.row_number().over(wb))
+        ).persist()
         self._ranked = ranked
 
         admitted = F.col("_rb") <= F.col("_budget")

@@ -10,10 +10,15 @@ from geospatial_web_scraper_spark.kernel import (
     add_to_stringbuilder,
     extract_links,
     extract_metadata,
+    extract_metadata_raw,
+    extract_page,
     go_path_base,
     go_path_ext,
 )
-from geospatial_web_scraper_spark.kernel.html_kernel import filename_for_download
+from geospatial_web_scraper_spark.kernel.html_kernel import (
+    extract_links_tree,
+    filename_for_download,
+)
 
 
 # ---------------------------------------------------------------- path helpers
@@ -354,7 +359,147 @@ def test_streaming_links_match_tree_walk_adversarial():
         "<a href=x/ >y</a>",
         # unwanted id with slashed unquoted href on the anchor itself
         "<a id=nav-menu href=/x/>y</a>",
+        # CDATA ends only at a complete </script> / </style> end tag
+        '<script>x</scriptx><a href="/fake">f</a></script><a href="/real">r</a>',
+        '<style>x</styles><a href="/fake">f</a></style><a href="/real">r</a>',
     ]
     base = "https://host0.example.org/page/1.html"
     for html in cases:
         assert extract_links(html, base) == extract_links_tree(html, base), html
+        # the combined links + text pass emits the same links
+        assert extract_page(html, base)[0] == extract_links(html, base), html
+
+
+# ---------------------------------------------------------------- one pass
+def test_page_metadata_matches_tree_walk_on_corpus():
+    """extract_page's text mode equals the tree walk's raw metadata on
+    every corpus page at filler 0 and 3, and on every 5th heavy page."""
+    from geospatial_web_scraper_spark import corpus
+
+    n = 300
+    for filler, step in ((0, 1), (3, 1), (40, 5)):
+        for i in range(0, n, step):
+            html = corpus.html_of(i, n, filler_paras=filler)
+            url = corpus.url_of(i)
+            links, meta = extract_page(html, url)
+            assert meta == extract_metadata_raw(html, url), (filler, i)
+            assert links == extract_links_tree(html, url), (filler, i)
+            assert extract_page(html, url, links=False) == (None, meta)
+
+
+PAGE_CASES = [
+    # entities in <title>, unescaped per chunk
+    "<title>A &amp; B &lt;c&gt;</title><p>x &amp; y</p>",
+    # an element as title's first child contributes its tag name
+    "<title><b>bold</b> rest</title>",
+    '<title><meta property="og:title" content="T"></title>',
+    # <title/> never opens; an empty title has no first child
+    "<title/><p>x</p>",
+    "<title></title><p>y</p><title>  </title>",
+    # a charref that unescapes to nothing makes no text node
+    "<p>x &#1; y</p><title>&#1;<i>t</i></title>",
+    # role= and tag-name metadata gates
+    '<div role="navigation"><p>gated</p></div><p>kept</p>',
+    "<nav><p>n</p></nav><footer><p>f</p></footer><p>k</p>",
+    "<header><title>h</title></header><li>item</li>",
+    # ld+json inside a skipped subtree, empty and unterminated scripts
+    '<div class="sidebar"><script type="application/ld+json">'
+    '{"name": "hidden"}</script></div><p>t</p>',
+    '<script type="application/ld+json"></script><p>e</p>',
+    '<p>before</p><script type="application/ld+json">{"name": "x"}',
+    '<script type="application/ld+json">{"name": "N", "keywords": "a,b"}'
+    '</SCRIPT ><p>after</p>',
+    # script bodies are data; only a complete end tag closes them
+    '<p>x</p><script>var a="<p>no</p>";</script ><p>after</p>',
+    "<style>p{}</styles><p>in style</p></style><p>out</p>",
+    # uppercase tags
+    "<TITLE>Up</TITLE><P>Para</P><LI>item</LI>",
+    # unquoted "/"-terminated attributes: a value, not a self-close
+    "<meta name=description content=abc/><p>z</p>",
+    "<div class=usa-banner/><p>in</p></div><p>out</p>",
+    # comments split text into chunks; html.parser closes at "-- >"
+    "<p>one<!-- c -->two</p>",
+    "<p>a<!-- x -- >b</p>",
+    # visible text only under a visible parent
+    "<h1>h</h1><h2 class='menu'>m</h2><h3>x<span>in span</span>y</h3>",
+    '<head><link type="application/rss+xml" href="/f.xml">'
+    '<link class="nav" type="text/xml" href="/g.xml"></head>',
+    # constructs the tokenizer does not model take the tree walk
+    "<p>a < b</p>",
+    "<p>tail<!-- open",
+    "<p>t</p><!DOCTYPE",
+    "<![CDATA[x]]><p>y</p>",
+    "",
+]
+
+
+def test_page_metadata_matches_tree_walk_adversarial():
+    base = "https://host0.example.org/page/1.html"
+    for html in PAGE_CASES:
+        links, meta = extract_page(html, base)
+        assert meta == extract_metadata_raw(html, base), html
+        assert links == extract_links_tree(html, base), html
+
+
+def _attr(key, val, quote):
+    if quote == "" and " " in val:
+        quote = '"'
+    return f" {key}={quote}{val}{quote}"
+
+
+def _soup():
+    """Tag soup over a small alphabet: the gate classes/roles/tags,
+    title/meta/link/script, entities, comments, quote styles, self-closes,
+    unmatched end tags and stray "<"."""
+    from hypothesis import strategies as st
+
+    tags = ["a", "p", "li", "h1", "div", "span", "title", "meta", "link",
+            "nav", "br", "img", "ul", "header", "b", "A", "P", "TITLE"]
+    values = ["/a", "/d/f.ZIP", "mailto:x@y", "x/", "nav-menu", "sidebar",
+              "Main", "description", "og:title", "keywords", "a, b",
+              "application/rss+xml", "application/ld+json", "T &amp; U", "a b"]
+    keys = ["href", "class", "id", "role", "name", "property", "content",
+            "type"]
+    attr = st.builds(_attr, st.sampled_from(keys), st.sampled_from(values),
+                     st.sampled_from(['"', "'", ""]))
+    start = st.builds(
+        lambda t, attrs, close: f"<{t}{''.join(attrs)}{close}>",
+        st.sampled_from(tags), st.lists(attr, max_size=3),
+        st.sampled_from(["", "", "/", " /"]),
+    )
+    end = st.builds(lambda t: f"</{t.lower()}>", st.sampled_from(tags))
+    text = st.sampled_from(["word", " two words ", "&amp;", "&lt;b&gt;",
+                            "&#1;", "\n", "a < b", "caf&eacute;", "  "])
+    markup = st.sampled_from(["<!-- c -->", "<!-- <p>no</p> -->",
+                              "<!DOCTYPE html>"])
+    script = st.builds(
+        lambda t, typ, body, close: f"<{t}{typ}>{body}{close}",
+        st.sampled_from(["script", "style", "SCRIPT"]),
+        st.sampled_from(["", ' type="application/ld+json"', ' class="nav"']),
+        st.sampled_from(['{"name": "N", "description": "D", "keywords": "k"}',
+                         "var s = '<a href=\"/fake\">';",
+                         "</scriptx><p>in</p>", "[1, 2]", ""]),
+        st.sampled_from(["</script>", "</style>", "</script >", "</SCRIPT>",
+                         ""]),
+    )
+    return st.lists(st.one_of(start, end, text, markup, script),
+                    max_size=30).map("".join)
+
+
+def test_page_matches_tree_twins_fuzz():
+    """Differential fuzz: links and raw metadata from the one pass equal
+    the tree twins on generated tag soup."""
+    from hypothesis import HealthCheck, given, settings
+
+    base = "https://host0.example.org/page/1.html"
+
+    @settings(max_examples=300, deadline=None, database=None,
+              derandomize=True, suppress_health_check=[HealthCheck.too_slow])
+    @given(_soup())
+    def check(html):
+        links, meta = extract_page(html, base)
+        assert links == extract_links_tree(html, base)
+        assert meta == extract_metadata_raw(html, base)
+        assert extract_links(html, base) == links
+
+    check()

@@ -2,6 +2,8 @@
 per-round caps hold, geo-priority ordering, deferral (delay, not drop),
 and determinism."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -395,19 +397,29 @@ def test_deferred_is_a_filter_of_the_ranking(spark):
     assert admitted.isdisjoint(deferred)
     assert admitted | set(deferred) == {r[0] for r in rows}
     sched.release()
-    # with a budget table the two branches share phase A's exchange (a
-    # literal budget lets Spark pre-limit the survivors' shuffle instead)
+    # phase A's (host, salt) exchange runs exactly once, whether the
+    # budget is a literal (which invites Spark's window-group-limit
+    # rewrite) or comes from a budget table
     budgets = spark.createDataFrame(
         [("h0.org", 3)], "host string, tokens_per_round int"
     )
-    tabled = PolitenessScheduler(
-        host_budget=budgets, default_tokens_per_round=3, n_salts=4
-    )
-    tabled.apply(frontier, 0)
-    assert tabled._ranked.count() == 40
-    ranked_plan = tabled._ranked._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in ranked_plan, ranked_plan
-    tabled.release()
+    for sched in (
+        PolitenessScheduler(default_tokens_per_round=3, n_salts=4),
+        PolitenessScheduler(
+            host_budget=budgets, default_tokens_per_round=3, n_salts=4
+        ),
+    ):
+        sched.apply(frontier, 0)
+        assert sched._ranked.count() == 40
+        plan = sched._ranked._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        window_a = re.findall(
+            r"\+- Exchange hashpartitioning\(_host#\d+, _salt#", final
+        )
+        assert len(window_a) == 1, final
+        assert "ReusedExchange" not in final, final
+        assert "WindowGroupLimit" not in final, final
+        sched.release()
 
 
 # ---------------------------------------------------------------------------
