@@ -59,7 +59,7 @@ from .operators.lm import bigram_lm_scores, pmi_collocations
 from .operators.profile import group_quantiles, heavy_hitters
 from .operators.sessions import sessionize
 from .operators.relevance import bm25_oracle_sql, bm25_scores
-from .operators.extract import extract_links_udf, extract_meta_udf
+from .operators.extract import extract_meta_udf, extract_rows, feed_lookup
 from .operators.multimodal import decode_features
 from .operators.politeness import priority_expr
 from .plans.bfs import CrawlEngine
@@ -1195,18 +1195,14 @@ def q_crawl_robots_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_x1_extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link-extraction kernel surface (X1): the fused Arrow pass over
-    fetchable pages' html, exploded to (src_url, pos, url, is_geo) —
-    mailto/tel/bad-href drops, relative resolution and geo
+    """Link-extraction kernel surface (X1): the link rows of the engine's
+    fused Arrow pass over fetchable pages' html, as (src_url, dst_url,
+    is_geo) — mailto/tel/bad-href drops, relative resolution and geo
     classification all value-checked against the formula edge oracle."""
-    pages = _fetchable_pages(spark)
-    links = pages.withColumn(
-        "_links", extract_links_udf(F.col("html"), F.col("url"))
-    ).select(F.col("url").alias("src_url"), F.explode("_links").alias("link"))
-    return links.select(
-        "src_url",
-        F.col("link.url").alias("dst_url"),
-        F.col("link.is_geo").alias("is_geo"),
+    return extract_rows(_fetchable_pages(spark), 1).select(
+        F.col("url").alias("src_url"),
+        F.col("link_url").alias("dst_url"),
+        F.col("link_is_geo").alias("is_geo"),
     ).distinct()
 
 
@@ -1226,15 +1222,9 @@ def q_x2_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_s6_xml_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6/C10: RSS/Atom link targets collected (not fetched) from
     ``<link type~=xml>`` — one row per (page, xml href)."""
-    from .operators.extract import extract_xml_links_udf
-
     pages = _fetchable_pages(spark)
-    return pages.select(
-        "url",
-        F.explode(extract_xml_links_udf(F.col("html"), F.col("url"))).alias(
-            "xml_link"
-        ),
-    )
+    meta = pages.withColumn("_m", extract_meta_udf(F.col("html"), F.col("url")))
+    return meta.select("url", F.explode("_m.xml_links").alias("xml_link"))
 
 
 def q_f6_geo_ext_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2950,11 +2940,10 @@ def q_c10_xml_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     title/description through the raw string builders. All four branches are value-checked: Atom-style
     feeds fold, standard RSS binds nothing (the reference quirk), malformed
     XML is skipped, and pages without feed links pass through unchanged."""
-    from .operators.extract import extract_meta_with_feeds
-
-    pages = _fetchable_pages(spark)
-    out = extract_meta_with_feeds(pages, corpus.xml_docs_df(spark))
-    return out.select("url", "title", F.col("description").alias("text"))
+    feeds = feed_lookup(corpus.xml_docs_df(spark))
+    return extract_rows(_fetchable_pages(spark), 2, feeds).select(
+        "url", "title", "text"
+    )
 
 
 def q_k1_download_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -215,7 +215,8 @@ def _attrs_unwanted(attrs) -> bool:
 # capture (end-slash, name, attr soup, self-close slash). Quoted '>' inside
 # attribute values is protected by the quote alternatives; the attr soup
 # is lazy so the trailing "/" of a self-closing tag lands in the
-# self-close group.
+# self-close group. The empty last alternative matches a "<" that opens
+# none of these, so every "<" of the page is one match.
 _TAG_RE = re.compile(
     r"<(?:"
     r"!--.*?(?:--\s*>|\Z)"
@@ -223,7 +224,7 @@ _TAG_RE = re.compile(
     r"|![^>]*>?"
     r"|\?[^>]*>?"
     r"|(/?)([a-zA-Z][^\s/>]*)((?:\"[^\"]*\"|'[^']*'|[^>\"'])*?)\s*(/?)>"
-    r")",
+    r"|)",
     re.S,
 )
 _ATTR_RE = re.compile(
@@ -328,11 +329,16 @@ def extract_page(html: str | bytes, base_url: str, *, links: bool = True,
     * script/style bodies are one raw CDATA chunk; an ld+json script's
       body is parsed as JSON, every other script is skipped.
 
-    A ``<`` that opens no tag splits html.parser's text into extra chunks,
-    a comment or declaration cut off by the end of the page becomes text
-    there, and ``<![`` sections follow rules of their own; the tokenizer
-    does not model those, so such a page's metadata comes from the tree
-    walk (its links still come from this pass).
+    Three constructs are not modelled, and a page with one of them takes
+    the tree twins instead: a ``<`` that opens no tag (html.parser splits
+    text there, and reads ``</`` + non-letter as a bogus comment up to the
+    next ``>``), a comment or declaration cut off by the end of the page
+    (html.parser turns it into text up to its first ``>`` and parses on),
+    and an end tag with a quoted ``>`` in its attribute soup (html.parser
+    ends it at the first ``>``). Each is seen at its own match, O(1) per
+    tag. ``<![`` sections follow rules of their own too, but html.parser
+    raises on most of their keywords, so only such a page's metadata comes
+    from the tree walk; its links still come from this pass.
 
     Output equality with the tree twins (:func:`extract_links_tree`,
     :func:`extract_metadata_raw`) is pinned by tests over the corpus, an
@@ -345,7 +351,8 @@ def extract_page(html: str | bytes, base_url: str, *, links: bool = True,
     stack: list[str] = ["\x00"]
     link_off: int | None = None if links else 0
     meta_off: int | None = None if text else 0
-    tree_meta = False  # an unmodelled construct: the tree walk does text
+    tree = False  # an unmodelled construct: the page takes the tree twins
+    tree_meta = False  # a "<![" section: the tree walk does text
     title_buf = desc_buf = ""
     keywords: list[str] = []
     xml_links: list[str] = []
@@ -358,36 +365,37 @@ def extract_page(html: str | bytes, base_url: str, *, links: bool = True,
     while pos < n:
         m = tag_search(html, pos)
         start = n if m is None else m.start()
-        if start > pos and meta_off is None:  # one text chunk
-            if html.find("<", pos, start) >= 0:
-                tree_meta, meta_off = True, 0
-                if out is None:
-                    break
-            elif title_open or stack[-1] in VISIBLE_TEXT_PARENTS:
-                chunk = html[pos:start]
-                if "&" in chunk:
-                    chunk = _html_unescape(chunk)
-                if chunk:  # charrefs may unescape to nothing: no node
-                    if title_open:
-                        title_buf = add_to_stringbuilder(title_buf, chunk)
-                        title_open = False
-                    else:
-                        desc_buf = add_to_stringbuilder(desc_buf, chunk)
+        if start > pos and meta_off is None and (  # one text chunk
+            title_open or stack[-1] in VISIBLE_TEXT_PARENTS
+        ):
+            chunk = html[pos:start]
+            if "&" in chunk:
+                chunk = _html_unescape(chunk)
+            if chunk:  # charrefs may unescape to nothing: no node
+                if title_open:
+                    title_buf = add_to_stringbuilder(title_buf, chunk)
+                    title_open = False
+                else:
+                    desc_buf = add_to_stringbuilder(desc_buf, chunk)
         if m is None:
             break
         pos = m.end()
         is_end, name, attr_src, self_close_mark = m.group(1, 2, 3, 4)
-        if name is None:  # comment / doctype / CDATA / PI
-            if meta_off is None and (
-                html.startswith("<![", start)
-                or (pos == n and _unterminated(m.group()))
-            ):
-                tree_meta, meta_off = True, 0
-                if out is None:
-                    break
+        if name is None:  # comment / doctype / CDATA / PI, or a stray "<"
+            if html.startswith("<![", start):
+                if text:
+                    tree_meta, meta_off = True, 0
+                    if out is None:
+                        break
+            elif pos == start + 1 or (pos == n and _unterminated(m.group())):
+                tree = True
+                break
             continue
         tag = name.lower()
         if is_end:  # end tag
+            if attr_src and ">" in attr_src:
+                tree = True
+                break
             for i in range(len(stack) - 1, 0, -1):
                 if stack[i] == tag:
                     del stack[i:]
@@ -472,6 +480,11 @@ def extract_page(html: str | bytes, base_url: str, *, links: bool = True,
                 link_off = None
             if meta_off == len(stack):
                 meta_off = None
+    if tree:
+        return (
+            extract_links_tree(html, base_url) if links else None,
+            extract_metadata_raw(html, base_url) if text else None,
+        )
     if not text:
         return out, None
     if tree_meta:

@@ -1,21 +1,22 @@
 """HTML extraction as vectorized pandas/Arrow UDFs (the only Python on the
 hot path, batched through Arrow — never row-at-a-time serde).
 
-``extract_links_udf`` is the X1 UDTF (reference ``crawler.go:97-131``):
-one page row in → array of link structs out, exploded engine-side with
-``posexplode`` so document order survives as an explicit column.
+Two per-page loops, one per output shape:
 
-``extract_meta_udf`` is X2 (reference ``metadata.go:40-220``): returns the
-title/description/keywords struct whose ``description`` is the
-byte-identical extracted text per url.
+* ``extract_round_outputs`` is the crawl engine's fused per-round pass:
+  downloads, links (X1, reference ``crawler.go:97-131``), texts (X2, with
+  the optional C10 feeds fold) and per-partition lineage out of ONE Arrow
+  scan of the fetched pages, and links and text out of ONE tokenizer pass
+  per page (``kernel.extract_page``). Every row-producing caller outside
+  the engine — the x1/c10 catalog rows, engine #2's harvest, the
+  link-graph CLI — reads its ``kind=1`` link rows or ``kind=2`` text rows
+  through :func:`extract_rows`.
+* ``extract_meta_udf`` is X2 as a column expression (reference
+  ``metadata.go:40-220``): the title/description/keywords/xml_links
+  struct whose ``description`` is the byte-identical extracted text per
+  url (x2, c7, s6 and the streaming harvest).
 
-``extract_round_outputs`` is the crawl engine's fused per-round pass:
-downloads, links, texts (with the optional C10 feeds fold) and
-per-partition lineage out of ONE Arrow scan of the fetched pages, and
-links and text out of ONE tokenizer pass per page
-(``kernel.extract_page``).
-
-All delegate per-document work to the shared pure-Python kernel
+Both delegate per-document work to the shared pure-Python kernel
 (:mod:`..kernel`), which the single-threaded oracle also uses — Spark adds
 the distribution, Arrow the batching; the semantics live in one place.
 """
@@ -27,77 +28,32 @@ from pyspark import TaskContext
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernel import extract_links, extract_page, finish_metadata
-
-LINK_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("is_geo", T.BooleanType()),
-            T.StructField("pos", T.IntegerType()),
-        ]
-    )
-)
+from ..constants import GEO_MIME_TYPES
+from ..kernel import extract_page, finish_metadata
 
 META_TYPE = T.StructType(
     [
         T.StructField("title", T.StringType()),
         T.StructField("description", T.StringType()),
         T.StructField("keywords", T.ArrayType(T.StringType())),
+        # S6 (metadata.go:180-212): hrefs of <link type~=xml> — collected,
+        # NOT fetched (the fetch is the offline C10 fold of extract_rows)
+        T.StructField("xml_links", T.ArrayType(T.StringType())),
     ]
 )
-
-
-@F.pandas_udf(LINK_TYPE)
-def extract_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
-    out = []
-    for h, u in zip(html, base_url):
-        if h is None or u is None:
-            out.append([])
-            continue
-        out.append(
-            [(l["url"], l["is_geo"], l["pos"]) for l in extract_links(bytes(h), u)]
-        )
-    return pd.Series(out, dtype=object)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def extract_xml_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
-    """S6 (metadata.go:180-212): hrefs of ``<link type~=xml>`` elements —
-    collected, NOT fetched (the reference's secondary RSS fetch is a network
-    side-effect outside the no-network correctness contract)."""
-    out = []
-    for h, u in zip(html, base_url):
-        if h is None or u is None:
-            out.append([])
-            continue
-        out.append(extract_page(bytes(h), u, links=False)[1][3])
-    return pd.Series(out, dtype=object)
 
 
 @F.pandas_udf(META_TYPE)
 def extract_meta_udf(html: pd.Series, base_url: pd.Series) -> pd.DataFrame:
-    titles, descs, kws = [], [], []
-    for h, u in zip(html, base_url):
-        if h is None or u is None:
-            titles.append(None)
-            descs.append(None)
-            kws.append(None)
-            continue
-        md = finish_metadata(extract_page(bytes(h), u, links=False)[1], u)
-        titles.append(md["title"])
-        descs.append(md["description"])
-        kws.append(md["keywords"])
-    return pd.DataFrame({"title": titles, "description": descs, "keywords": kws})
-
-
-FEED_META_TYPE = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("description", T.StringType()),
+    mds = [
+        None if h is None or u is None
+        else finish_metadata(extract_page(bytes(h), u, links=False)[1], u)
+        for h, u in zip(html, base_url)
     ]
-)
+    return pd.DataFrame(
+        {f: [None if md is None else md[f] for md in mds]
+         for f in META_TYPE.fieldNames()}
+    )
 
 
 def feed_lookup(feeds):
@@ -110,94 +66,6 @@ def feed_lookup(feeds):
     rows = feeds.where(F.col("xml").isNotNull()).select("url", "xml").collect()
     return feeds.sparkSession.sparkContext.broadcast(
         dict(sorted((r["url"], r["xml"]) for r in rows))
-    )
-
-
-def extract_meta_with_feeds(pages, feeds, html_col: str = "html",
-                            url_col: str = "url"):
-    """C10 — metadata extraction INCLUDING the secondary RSS/Atom harvest
-    (``metadata.go:180-212``), with the 5s-timeout HTTP GET modeled as a
-    lookup in the offline ``feeds(url, xml)`` table.
-
-    Distributed shape: the feeds table is broadcast once as a
-    ``{url: xml}`` dict (:func:`feed_lookup`) and ONE Arrow pass over the
-    pages runs the one-pass text extraction and the kernel fold
-    (``kernel.finish_metadata``, shared with the oracle) per page,
-    resolving each xml href and looking it up in place. No join, no
-    shuffle: the pass inherits the pages scan's partitioning, so HTML
-    bytes never move."""
-    lookup = feed_lookup(feeds)
-
-    def gen(batches):
-        feed_fetch = lookup.value.get
-        for pdf in batches:
-            urls, titles, descs = [], [], []
-            for u, h in zip(pdf[url_col], pdf[html_col]):
-                if h is None or u is None:
-                    continue
-                raw = extract_page(bytes(h), u, links=False)[1]
-                md = finish_metadata(raw, u, feed_fetch)
-                urls.append(u)
-                titles.append(md["title"])
-                descs.append(md["description"])
-            yield pd.DataFrame(
-                {"url": urls, "title": titles, "description": descs}
-            )
-
-    return pages.select(url_col, html_col).mapInPandas(gen, FEED_META_TYPE)
-
-
-def extract_links_flat(
-    df, carry_cols: list[str], html_col: str = "html", url_col: str = "url"
-):
-    """Hot-path variant: mapInPandas emitting already-exploded FLAT rows
-    (link_url, link_pos, link_is_geo + carried columns).
-
-    ~2× faster than the nested array<struct> UDF + explode: flat string/int
-    Arrow columns skip the per-row list-of-tuples construction and the
-    nested-type conversion on both sides of the Arrow boundary, and the
-    explode disappears entirely. Same kernel, same semantics (asserted by
-    the engine trace-parity tests)."""
-    in_fields = {f.name: f for f in df.schema.fields}
-    out_schema = T.StructType(
-        [in_fields[c] for c in carry_cols]
-        + [
-            T.StructField("link_url", T.StringType()),
-            T.StructField("link_pos", T.IntegerType()),
-            T.StructField("link_is_geo", T.BooleanType()),
-        ]
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in carry_cols}
-            link_url: list[str] = []
-            link_pos: list[int] = []
-            link_geo: list[bool] = []
-            htmls = pdf[html_col]
-            urls = pdf[url_col]
-            carried = [pdf[c] for c in carry_cols]
-            for ridx in range(len(pdf)):
-                h = htmls.iloc[ridx]
-                u = urls.iloc[ridx]
-                if h is None or u is None:
-                    continue
-                links = extract_links(bytes(h), u)
-                if not links:
-                    continue
-                for link in links:
-                    link_url.append(link["url"])
-                    link_pos.append(link["pos"])
-                    link_geo.append(link["is_geo"])
-                for cidx, cname in enumerate(carry_cols):
-                    out[cname].extend([carried[cidx].iloc[ridx]] * len(links))
-            yield pd.DataFrame(
-                {**out, "link_url": link_url, "link_pos": link_pos,
-                 "link_is_geo": link_geo}
-            )
-
-    return df.select(*dict.fromkeys([*carry_cols, html_col, url_col])).mapInPandas(
-        gen, out_schema
     )
 
 
@@ -360,3 +228,24 @@ def extract_round_outputs(fetched, geo_mime_types, max_depth: int,
 
     cols = ["url", "seq", "depth", "status", "content_type", "html"]
     return fetched.select(*cols).mapInPandas(gen, ROUND_OUT_SCHEMA)
+
+
+def extract_rows(pages, kind: int, feeds=None):
+    """The ``kind=1`` link rows or the ``kind=2`` text rows of
+    :func:`extract_round_outputs` over a pages table (url, status,
+    content_type, html) outside a crawl round: ``seq`` and ``depth`` are
+    the constant 0, the pass's own routing picks the pages (status 200,
+    non-geo MIME, html present), and it parses only for the one kind.
+    ``feeds`` (:func:`feed_lookup`) runs the C10 fold on the text rows.
+
+    One Arrow pass over the pages scan and no shuffle: link rows keep
+    document order in ``link_pos``, and HTML bytes never move."""
+    links = kind == 1
+    fetched = pages.select(
+        "url", F.lit(0).cast("long").alias("seq"), F.lit(0).alias("depth"),
+        "status", "content_type", "html",
+    )
+    return extract_round_outputs(
+        fetched, GEO_MIME_TYPES, 2 if links else 1, collect_text=not links,
+        feeds=feeds,
+    ).where(F.col("kind") == kind)

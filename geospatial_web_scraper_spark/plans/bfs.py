@@ -23,7 +23,7 @@ Scale notes (the 1000-executor / 10^10-frontier design point):
 * the only Python on the hot path is the Arrow-batched extraction UDF;
 * no driver-side loops over rows — driver actions are per-round counts only;
 * seq assignment avoids the single-reducer global window (functions.ordering);
-* the seen set is keyed by ``xxhash64(canonical_url)`` and the anti-join can
+* the seen set is the url column alone, and the anti-join can
   be preceded by a sharded Bloom prefilter (operators.seen) so that in the
   steady state — where most candidates are duplicates — the exact join only
   sees the bloom-positive slice;
@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..constants import GEO_MIME_TYPES, MAX_CRAWL_ENGINE1, MAX_DEPTH
 from ..functions.ordering import with_global_seq
-from ..functions.urls import url_hash, url_host
+from ..functions.urls import url_host
 from ..operators.extract import extract_round_outputs, feed_lookup
 from .store import SnapshotStore
 
@@ -121,7 +121,7 @@ class CrawlEngine:
         """``seeds``: (seed_order int, url string, …). Depth-0 entry order is
         seed_order (``crawler.go:37-43``)."""
         frontier = seed_frontier(seeds)
-        seen = self.spark.createDataFrame([], "url string, url_hash long")
+        seen = self.spark.createDataFrame([], "url string")
         return self._loop(frontier, seen, start_round=0, recorded_total=0,
                           trace_parts=[], download_parts=[], text_parts=[],
                           lineage_rows=[])
@@ -150,11 +150,9 @@ class CrawlEngine:
         on TTL expiry), where a rebuild would double-insert the surviving
         fingerprints and waste capacity."""
         frontier = seed_frontier(seeds)
-        seen = seen_urls.select(
-            F.col("url"), url_hash(F.col("url")).alias("url_hash")
-        )
+        seen = seen_urls.select("url")
         if self.seen_filter is not None and update_filter:
-            self.seen_filter.update(seen.select("url"))
+            self.seen_filter.update(seen)
         return self._loop(frontier, seen, start_round=0, recorded_total=0,
                           trace_parts=[], download_parts=[], text_parts=[],
                           lineage_rows=[])
@@ -192,17 +190,13 @@ class CrawlEngine:
         # round's snapshot must stay proportional to the round, not the
         # crawl history
         seen = reduce(
-            DataFrame.unionByName,
-            [
-                t.select("url", url_hash(F.col("url")).alias("url_hash"))
-                for t in trace_parts
-            ],
+            DataFrame.unionByName, [t.select("url") for t in trace_parts]
         )
         if self.seen_filter is not None:
             # the bloom's bits are in-memory state: rebuild from the seen
             # snapshot, else resumed rounds would route already-seen URLs
             # down the definitely-new path (false negatives)
-            self.seen_filter.update(seen.select("url"))
+            self.seen_filter.update(seen)
         # reconcile stored download snapshots with the CURRENT
         # download_bytes setting (review r3): a crawl checkpointed without
         # bodies and resumed with --download-bytes (or vice versa) would
@@ -300,10 +294,10 @@ class CrawlEngine:
             if self.seen_filter is not None:
                 definitely_new, maybe_seen = self.seen_filter.split(first)
                 new = definitely_new.unionByName(
-                    maybe_seen.join(seen.select("url"), "url", "left_anti")
+                    maybe_seen.join(seen, "url", "left_anti")
                 )
             else:
-                new = first.join(seen.select("url"), "url", "left_anti")
+                new = first.join(seen, "url", "left_anti")
 
             # scheduler hook: priority/politeness reorder-and-cap (M5);
             # default FIFO keeps (parent_seq, pos) total order (§8.2)
@@ -434,11 +428,9 @@ class CrawlEngine:
             # barrier removes one serial job per round; on the final round
             # it never materializes at all. Still a checkpoint, so lineage
             # does not grow across rounds.
-            seen = (
-                seen.unionByName(
-                    recorded_df.select("url", url_hash(F.col("url")).alias("url_hash"))
-                )
-            ).localCheckpoint(eager=False)
+            seen = seen.unionByName(recorded_df.select("url")).localCheckpoint(
+                eager=False
+            )
             if self.seen_filter is not None:
                 self.seen_filter.update(recorded_df.select("url"))
 

@@ -29,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..constants import GEO_MIME_TYPES, TOP_K_SEEDS
-from ..operators.extract import extract_links_flat
+from ..constants import TOP_K_SEEDS
+from ..operators.extract import extract_rows
 from ..operators.similarity import cosine_expr
 
 EMBED_DIM = 8
@@ -113,7 +113,13 @@ def harvest(
 ) -> DataFrame:
     """One-round harvest from the ranked seeds. → (seed_url, url, is_geo),
     distinct (the reference accumulates duplicates in arrival order; the
-    relational form is the distinct link set per seed)."""
+    relational form is the distinct link set per seed).
+
+    The seeds' pages go through the engine's fused extraction pass
+    (``operators.extract.extract_rows``), whose routing is Extract2's: a
+    status-200 page with a non-geo MIME type and html pours its links
+    into the harvest; geo-MIME downloads and non-200 (or missing) pages
+    yield nothing."""
     selected = rank_seeds(
         seeds, query_text, top_k, quirk_compat,
         emb_col=emb_col, query_vec=query_vec,
@@ -121,13 +127,7 @@ def harvest(
     fetched = selected.join(
         pages.select("url", "status", "content_type", "html"), "url", "left"
     )
-    html_pages = fetched.filter(
-        (F.col("status") == 200)
-        & ~F.col("content_type").isin(*GEO_MIME_TYPES)
-        & F.col("html").isNotNull()
-    )
-    flat = extract_links_flat(html_pages, carry_cols=["url"])
-    return flat.select(
+    return extract_rows(fetched, 1).select(
         F.col("url").alias("seed_url"),
         F.col("link_url").alias("url"),
         F.col("link_is_geo").alias("is_geo"),

@@ -59,9 +59,7 @@ def main() -> None:
 
     from geospatial_web_scraper_spark.functions.urls import url_host
     from geospatial_web_scraper_spark.operators import graph, linkspam
-    from geospatial_web_scraper_spark.operators.extract import (
-        extract_links_flat,
-    )
+    from geospatial_web_scraper_spark.operators.extract import extract_rows
 
     if args.synthetic_pages:
         from geospatial_web_scraper_spark import corpus
@@ -78,18 +76,15 @@ def main() -> None:
         .localCheckpoint()
     )
     # links originate only from fetchable pages — the engine's S1/F5/F7
-    # gate (status 200, non-download content type), applied when the
-    # table carries those columns; every page stays a NODE either way
-    fetchable = pages
-    if "status" in pages.columns:
-        fetchable = fetchable.filter(F.col("status") == 200)
-    if "content_type" in pages.columns:
-        fetchable = fetchable.filter(
-            F.col("content_type").startswith("text/html")
-        )
-    links = extract_links_flat(
-        fetchable.select("url", "html"), carry_cols=["url"]
-    ).filter(~F.col("link_is_geo"))
+    # gate (status 200, non-download content type), the routing of its
+    # extraction pass; a table without those columns counts as all
+    # fetched html. Every page stays a NODE either way
+    fetched = pages
+    if "status" not in pages.columns:
+        fetched = fetched.withColumn("status", F.lit(200))
+    if "content_type" not in pages.columns:
+        fetched = fetched.withColumn("content_type", F.lit("text/html"))
+    links = extract_rows(fetched, 1).filter(~F.col("link_is_geo"))
     edges = (
         links.select(
             F.xxhash64("url").alias("src"),

@@ -833,9 +833,7 @@ def test_pagerank_kernel_extracted_graph_matches_formula_graph(spark):
     # reproduce the catalog's formula-derived PageRank digit-for-digit
     # as a rank multiset (kernel ≡ formula ≡ graph operator, end to end)
     from geospatial_web_scraper_spark import corpus, entry_queries as eq
-    from geospatial_web_scraper_spark.operators.extract import (
-        extract_links_flat,
-    )
+    from geospatial_web_scraper_spark.operators.extract import extract_rows
 
     pages = corpus.corpus_df(spark, 300)
     nodes = (
@@ -846,9 +844,7 @@ def test_pagerank_kernel_extracted_graph_matches_formula_graph(spark):
         (F.col("status") == 200)
         & F.col("content_type").startswith("text/html")
     )
-    links = extract_links_flat(
-        fetchable.select("url", "html"), carry_cols=["url"]
-    ).filter(~F.col("link_is_geo"))
+    links = extract_rows(fetchable, 1).filter(~F.col("link_is_geo"))
     edges = links.select(
         F.xxhash64("url").alias("src"), F.xxhash64("link_url").alias("dst")
     ).join(nodes.select(F.col("node_id").alias("dst")), "dst", "leftsemi")

@@ -362,6 +362,15 @@ def test_streaming_links_match_tree_walk_adversarial():
         # CDATA ends only at a complete </script> / </style> end tag
         '<script>x</scriptx><a href="/fake">f</a></script><a href="/real">r</a>',
         '<style>x</styles><a href="/fake">f</a></style><a href="/real">r</a>',
+        # "</" + non-letter is a bogus comment up to the next ">"
+        '</3<a href="q">q</a>',
+        # "</ name>" is an end tag; it pops the suppression frame
+        '<div class="nav-menu"></ div><a href="/after">z</a>',
+        # an end tag ends at its first ">", quoted or not
+        '</a b="x>" <a href="/q">q</a>',
+        # an unterminated comment is text up to its first ">"
+        '<p><!-- c </p><a href="b">b</a>',
+        '<!--x><a href="b">b</a>',
     ]
     base = "https://host0.example.org/page/1.html"
     for html in cases:
@@ -450,7 +459,7 @@ def _attr(key, val, quote):
 def _soup():
     """Tag soup over a small alphabet: the gate classes/roles/tags,
     title/meta/link/script, entities, comments, quote styles, self-closes,
-    unmatched end tags and stray "<"."""
+    unmatched end tags, stray "<", and bare "</" and "<!--" atoms."""
     from hypothesis import strategies as st
 
     tags = ["a", "p", "li", "h1", "div", "span", "title", "meta", "link",
@@ -471,7 +480,7 @@ def _soup():
     text = st.sampled_from(["word", " two words ", "&amp;", "&lt;b&gt;",
                             "&#1;", "\n", "a < b", "caf&eacute;", "  "])
     markup = st.sampled_from(["<!-- c -->", "<!-- <p>no</p> -->",
-                              "<!DOCTYPE html>"])
+                              "<!DOCTYPE html>", "</", "<!--"])
     script = st.builds(
         lambda t, typ, body, close: f"<{t}{typ}>{body}{close}",
         st.sampled_from(["script", "style", "SCRIPT"]),

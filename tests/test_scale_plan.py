@@ -104,14 +104,16 @@ def test_neardup_embedding_is_bucket_blocked(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_c10_feed_fold_never_shuffles_html(spark):
-    """The feed fold runs inside the pages scan's partitions (the feeds
-    table is a broadcast dict, folded in place by one MapInPandas), so
-    HTML bytes never move. An Exchange carrying html would re-ship the
-    dominant data volume at every round."""
+@pytest.mark.parametrize("name", ["c10_xml_meta", "x1_extract_links"])
+def test_c10_feed_fold_never_shuffles_html(spark, name):
+    """The feed fold and the link extraction run inside the pages scan's
+    partitions (the engine's fused pass, one MapInPandas; the feeds table
+    is a broadcast dict folded in place), so HTML bytes never move. An
+    Exchange carrying html would re-ship the dominant data volume at
+    every round."""
     import re
 
-    df = entry_mod.queries()["c10_xml_meta"](spark, SF)
+    df = entry_mod.queries()[name](spark, SF)
     plan = _plan(df)
     assert "MapInPandas" in plan, plan
     for m in re.finditer(r"Exchange [^\n]*", plan):

@@ -128,23 +128,22 @@ def test_warc_pages_drive_extraction(spark, page_rows, tmp_path):
     """Pages read from WARC are drop-in for the extraction kernel: link
     extraction over the WARC-sourced table equals extraction over the
     native corpus table."""
-    from geospatial_web_scraper_spark.operators.extract import extract_links_udf
+    from geospatial_web_scraper_spark.operators.extract import extract_rows
+
+    def links(pages):
+        return extract_rows(pages, 1).select(
+            "url",
+            F.struct(
+                F.col("link_url").alias("url"),
+                F.col("link_is_geo").alias("is_geo"),
+                F.col("link_pos").alias("pos"),
+            ).alias("link"),
+        )
 
     (tmp_path / "c.warc.gz").write_bytes(_to_warc(page_rows, gz=True))
     warc_pages = pages_from_warc(spark, str(tmp_path))
-    a = (
-        warc_pages.select(
-            "url", F.explode(extract_links_udf("html", "url")).alias("link")
-        )
-        .orderBy("url", "link")
-        .collect()
-    )
-    b = (
-        corpus.corpus_df(spark, N)
-        .select("url", F.explode(extract_links_udf("html", "url")).alias("link"))
-        .orderBy("url", "link")
-        .collect()
-    )
+    a = links(warc_pages).orderBy("url", "link").collect()
+    b = links(corpus.corpus_df(spark, N)).orderBy("url", "link").collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
