@@ -2495,7 +2495,7 @@ def q_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     snaked across 8 shards so shard token totals are near-equal — the
     static load-balance step a data-loader fleet needs so no worker
     finishes an epoch early. The rank is the two-pass partition-prefix
-    pattern (plan-pinned: every window keyed by _pid); the assignment is
+    pattern (plan-pinned: no window, no exchange); the assignment is
     a pure function of the rank, so the oracle replays it exactly."""
     from .operators.packing import balanced_shards
 

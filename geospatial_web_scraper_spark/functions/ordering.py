@@ -2,22 +2,25 @@
 
 A naive ``row_number() OVER (ORDER BY ...)`` with no partition key collapses
 the whole DataFrame into a single reducer — fine at 10^3 rows, fatal at 10^10.
-:func:`with_global_seq` instead uses the classic two-pass pattern:
+:func:`with_global_seq` instead numbers rows in the stage that sorts them:
 
 1. range-repartition + sort within partitions on the order key (Spark's
-   distributed sample sort — the same machinery as ``orderBy``),
-2. one tiny driver-side pass over per-partition row counts to compute
-   cumulative offsets, then a *partition-local* ``row_number`` plus the
-   broadcast offset.
+   distributed sample sort), tagging each row with
+   ``monotonically_increasing_id`` = ``(partition << 33) + position`` before
+   the ``localCheckpoint``;
+2. one count job — a group-by on ``id >> 33`` — gives each partition's
+   cumulative offset; ``seq`` is the id plus its partition's broadcast delta
+   ``offset[p] - (p << 33)``.
 
-Cost: one extra count job over already-shuffled data; no single-reducer
-stage. This is how the crawl trace's contiguous ``seq`` stays exact at
-frontier scale (SURVEY.md §8.2 total-order contract).
+Cost: the checkpointed sort plus that count job; no single-reducer stage.
+The output is a projection of the checkpoint scan (no window, sort or
+exchange), so consumers read the sorted rows in place. This keeps the crawl
+trace's contiguous ``seq`` exact at frontier scale (SURVEY.md §8.2).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -30,7 +33,8 @@ def with_global_seq(
 ) -> tuple[DataFrame, int]:
     """Returns (df with contiguous ``seq_col`` starting at ``start`` in
     ``order_cols`` order, total row count) — the count falls out of the
-    offset pass for free."""
+    offset pass for free. ``order_cols`` must be a total order (ties take an
+    arbitrary order), and a range partition must hold fewer than 2^33 rows."""
     if num_partitions is None:
         num_partitions = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
@@ -39,29 +43,16 @@ def with_global_seq(
     d = (
         df.repartitionByRange(num_partitions, *cols)
         .sortWithinPartitions(*cols)
-        .withColumn("_pid", F.spark_partition_id())
+        .withColumn("_mid", F.monotonically_increasing_id())
         .localCheckpoint()
     )
-    counts = sorted(
-        (r["_pid"], r["cnt"])
-        for r in d.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    )
-    offsets: dict[int, int] = {}
-    acc = start
-    for pid, cnt in counts:
-        offsets[pid] = acc
-        acc += cnt
-    total = acc - start
-    if not offsets:
+    pid = F.shiftright(F.col("_mid"), 33)
+    counts = sorted(tuple(r) for r in d.groupBy(pid).count().collect())
+    if not counts:
         return df.withColumn(seq_col, F.lit(0).cast("long")).limit(0), 0
-    offset_expr = F.element_at(
-        F.create_map(
-            *[F.lit(x) for kv in offsets.items() for x in kv]  # k1,v1,k2,v2,...
-        ),
-        F.col("_pid"),
-    )
-    w = Window.partitionBy("_pid").orderBy(*cols)
-    out = d.withColumn(
-        seq_col, (F.row_number().over(w) - 1 + offset_expr).cast("long")
-    ).drop("_pid")
-    return out, total
+    deltas, acc = [], start
+    for p, cnt in counts:
+        deltas += [F.lit(p), F.lit(acc - (p << 33))]
+        acc += cnt
+    delta = F.element_at(F.create_map(*deltas), pid)
+    return d.withColumn(seq_col, F.col("_mid") + delta).drop("_mid"), acc - start

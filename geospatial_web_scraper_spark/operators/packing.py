@@ -137,7 +137,7 @@ def balanced_shards(
 
     Scale shape: the global rank is the two-pass pattern of
     :func:`..functions.ordering.with_global_seq` (range-repartition on
-    the sort key + partition-local row_number + broadcast prefix
+    the sort key, rows numbered in the sorting stage + broadcast prefix
     offsets) — never a bare ``ROW_NUMBER() OVER (ORDER BY ...)`` global
     window; everything after the rank is per-row arithmetic."""
     if n_shards <= 0:

@@ -7,7 +7,7 @@ becomes a deterministic driver loop where each round is one DataFrame DAG
     frontier_r
       → within-round first-wins dedup          (Window on url)        [F1]
       → left-anti join vs seen set (± bloom prefilter)                [J1]
-      → global seq assignment (two-pass distributed rank)             [§8.2]
+      → global seq assignment (numbered range sort, one count job)    [§8.2]
         (a round that admits no URL ends the crawl here)
       → budget cut                                                    [F10]
       → fetch = left join against the pages table                     [S1]
@@ -21,8 +21,11 @@ becomes a deterministic driver loop where each round is one DataFrame DAG
 Scale notes (the 1000-executor / 10^10-frontier design point):
 
 * the only Python on the hot path is the Arrow-batched extraction UDF;
-* no driver-side loops over rows — driver actions are per-round counts only;
-* seq assignment avoids the single-reducer global window (functions.ordering);
+* no driver-side loops over rows: the driver collects per-partition counts
+  and filter shards only, and the lineage counts are observed on passes the
+  round already runs (the frontier's first pass, the extraction pass);
+* seq is numbered in the stage that sorts it (functions.ordering): no
+  single-reducer window, and no exchange above the seq checkpoint;
 * the seen set is the url column alone, and the anti-join can
   be preceded by a sharded Bloom prefilter (operators.seen) so that in the
   steady state — where most candidates are duplicates — the exact join only
@@ -38,7 +41,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..constants import GEO_MIME_TYPES, MAX_CRAWL_ENGINE1, MAX_DEPTH
@@ -279,7 +282,11 @@ class CrawlEngine:
             if self.max_crawl is not None and recorded_total > self.max_crawl:
                 break  # budget exhausted (crawler.go:52-55)
 
-            n_candidates = frontier.count() if self.lineage_detail else -1
+            # candidates ride the round's first pass over the frontier (read
+            # once the seq checkpoint has run it: .get blocks on an unrun plan)
+            if self.lineage_detail:
+                cand_obs = Observation()
+                frontier = frontier.observe(cand_obs, F.count(F.lit(1)).alias("n"))
 
             # F1 within-round first-wins dedup, deterministic order
             w = Window.partitionBy("url").orderBy(*first_order)
@@ -326,9 +333,7 @@ class CrawlEngine:
                 n_recorded = n_new
 
             recorded_df = recorded_df.withColumn("host", url_host(F.col("url")))
-            # no materialization here: recorded_df sits on top of the
-            # seq-assignment checkpoint; recomputing the partition-local
-            # window is cheaper than another full copy of the round state
+            # not materialized: a projection of the seq checkpoint, read in place
             recorded_total += n_recorded
 
             trace_r = recorded_df.select(
@@ -363,13 +368,21 @@ class CrawlEngine:
             # and texts (X2, ± the C10 feeds fold) and sums each
             # partition's pages and bytes for the lineage. The single
             # localCheckpoint materializes only the small output rows
-            # (never HTML) and truncates cross-round plan growth.
+            # (never HTML) and truncates cross-round plan growth; the
+            # lineage observes the kind=3 summaries on the way into it.
             round_out = extract_round_outputs(
                 fetched, GEO_MIME_TYPES, self.max_depth,
                 collect_text=self.collect_text,
                 carry_download_bytes=self.download_bytes,
                 feeds=feeds,
-            ).localCheckpoint(eager=True)
+            )
+            if self.lineage_detail:
+                part_obs = Observation()
+                round_out = round_out.observe(part_obs, F.collect_list(F.when(
+                    F.col("kind") == 3,
+                    F.struct("partition_id", "urls_fetched", "bytes_fetched"),
+                )).alias("parts"))
+            round_out = round_out.localCheckpoint(eager=True)
             dl_cols = ["url", "body"] if self.download_bytes else ["url"]
             downloads_r = round_out.filter(F.col("kind") == 0).select(*dl_cols)
             download_parts.append(downloads_r)
@@ -403,22 +416,18 @@ class CrawlEngine:
 
             # lineage (north rule): per-partition fetch metrics + round totals
             if self.lineage_detail:
-                # candidates the round did not admit: within-round
-                # duplicates, already-seen URLs and rows the scheduler
-                # deferred or dropped
-                dedup_hits = n_candidates - n_new
                 # per-partition rows: the fused pass's kind=3 summaries,
-                # read off the checkpointed round output in partition order
-                part_rows = [
-                    (rnd, r[0], r[1], r[2], 0, -1, -1)
-                    for r in round_out.filter(F.col("kind") == 3)
-                    .select("partition_id", "urls_fetched", "bytes_fetched")
-                    .collect()
-                ]
-                lineage_rows.extend(part_rows)
-                lineage_rows.append(
-                    (rnd, -1, n_recorded, -1, dedup_hits, n_candidates, n_recorded)
+                # observed in task-completion order, put in partition order
+                lineage_rows.extend(
+                    (rnd, *r, 0, -1, -1)
+                    for r in sorted(map(tuple, part_obs.get["parts"]))
                 )
+                # dedup hits are the candidates the round did not admit:
+                # within-round duplicates, already-seen URLs and rows the
+                # scheduler deferred or dropped
+                n_candidates = cand_obs.get["n"]
+                lineage_rows.append((rnd, -1, n_recorded, -1,
+                                     n_candidates - n_new, n_candidates, n_recorded))
             else:
                 lineage_rows.append((rnd, -1, n_recorded, -1, -1, -1, n_recorded))
 

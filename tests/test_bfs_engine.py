@@ -4,6 +4,8 @@ rule: exact crawl ordering + URL-seen set + byte-identical text per url)."""
 import pytest
 
 from geospatial_web_scraper_spark import corpus
+from geospatial_web_scraper_spark.operators.politeness import PolitenessScheduler
+from geospatial_web_scraper_spark.operators.seen import ShardedBloomSeenFilter
 from geospatial_web_scraper_spark.oracle import crawl_oracle
 from geospatial_web_scraper_spark.plans.bfs import CrawlEngine
 from geospatial_web_scraper_spark.plans.store import SnapshotStore
@@ -269,16 +271,33 @@ def test_resume_with_toggled_download_bytes(spark, tmp_path_factory, oracle_run)
 @pytest.fixture(scope="module")
 def unbudgeted_runs(spark, tmp_path_factory):
     """The N=120 FIFO crawl to exhaustion (no budget), committed to a
-    snapshot store, once with lineage_detail on and once off."""
-    runs = {}
+    snapshot store, once with lineage_detail on and once off; each crawl
+    runs in its own job group, and ``runs["jobs"]`` holds the job counts."""
+    sc = spark.sparkContext
+    runs = {"jobs": {}}
     for detail in (True, False):
         store = SnapshotStore(spark, str(tmp_path_factory.mktemp("unbudgeted")))
-        run = CrawlEngine(
-            spark, corpus.corpus_df(spark, N), max_crawl=None,
-            lineage_detail=detail, store=store,
-        ).run(corpus.seeds_df(spark, N))
+        group = f"unbudgeted-lineage-{detail}"
+        sc.setJobGroup(group, "unbudgeted crawl")
+        try:
+            run = CrawlEngine(
+                spark, corpus.corpus_df(spark, N), max_crawl=None,
+                lineage_detail=detail, store=store,
+            ).run(corpus.seeds_df(spark, N))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status tracker is fed by the listener bus; drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        runs["jobs"][detail] = len(sc.statusTracker().getJobIdsForGroup(group))
         runs[detail] = (run, store)
     return runs
+
+
+def test_lineage_costs_no_job(unbudgeted_runs):
+    """Lineage rides passes the round already runs: the candidates count
+    and the per-partition rows are observed, not counted or collected."""
+    jobs = unbudgeted_runs["jobs"]
+    assert jobs[True] == jobs[False] > 0, jobs
 
 
 def test_lineage_modes_end_the_crawl_alike(spark, unbudgeted_runs):
@@ -308,10 +327,12 @@ def test_lineage_modes_end_the_crawl_alike(spark, unbudgeted_runs):
     assert _trace_rows(replay.trace) == want.trace
 
 
-def test_lineage_round_rows_pinned(unbudgeted_runs):
+def test_lineage_round_rows_pinned(spark, unbudgeted_runs):
     """Per-round (candidates, dedup_hits, recorded) of the unbudgeted N=120
     crawl: dedup_hits counts within-round duplicates plus already-seen
-    URLs, as the oracle's lineage does."""
+    URLs, as the oracle's lineage does. The same rows are pinned on a bloom
+    + scheduler crawl, where the candidates count is observed inside the
+    bloom split's persisted probe and deferred rows re-enter the frontier."""
     run, _ = unbudgeted_runs[True]
     rows = sorted(
         (r["round"], r["candidates"], r["dedup_hits"], r["recorded"])
@@ -325,14 +346,31 @@ def test_lineage_round_rows_pinned(unbudgeted_runs):
     want = crawl_oracle(pages, seeds, max_crawl=None).lineage
     assert rows == [(rnd, c, d, rec) for rnd, c, rec, d in want]
 
+    run = CrawlEngine(
+        spark, corpus.corpus_df(spark, N), max_crawl=None,
+        seen_filter=ShardedBloomSeenFilter(spark, n_shards=4,
+                                           bits_per_shard=1 << 16),
+        scheduler=PolitenessScheduler(default_tokens_per_round=5, n_salts=4),
+    ).run(corpus.seeds_df(spark, N))
+    rows = sorted(
+        (r["round"], r["candidates"], r["dedup_hits"], r["recorded"])
+        for r in run.lineage.where("partition_id = -1").collect()
+    )
+    assert [r[1:] for r in rows] == [
+        (6, 0, 6), (26, 5, 21), (77, 40, 37), (126, 87, 39), (49, 35, 14),
+        (33, 26, 7), (23, 18, 5), (11, 6, 5), (6, 1, 5), (1, 0, 1),
+    ]
+
 
 def test_lineage_partition_rows_sum_to_fetched_pages(unbudgeted_runs):
     """Per-partition rows of the unbudgeted N=120 crawl: in every round the
     partitions account for exactly the trace URLs the pages table holds
-    (all statuses) and their html bytes, each partition once. The
-    lineage-off crawl writes no per-partition rows."""
+    (all statuses) and their html bytes, each partition once, and the
+    commit manifest lists them by ascending partition_id. The lineage-off
+    crawl writes no per-partition rows."""
     pages = corpus.pages_dict(N)
-    run, _ = unbudgeted_runs[True]
+    run, store = unbudgeted_runs[True]
+    manifest = store.manifest()["rounds"]
     trace = run.trace.select("round", "url").collect()
     part = run.lineage.where("partition_id >= 0").collect()
     assert part
@@ -348,5 +386,7 @@ def test_lineage_partition_rows_sum_to_fetched_pages(unbudgeted_runs):
         ), rnd
         pids = [r["partition_id"] for r in rows]
         assert len(pids) == len(set(pids)), rnd
+        listed = [t[1] for t in manifest[str(rnd)]["lineage"] if t[1] >= 0]
+        assert listed == sorted(pids), rnd
     off, _ = unbudgeted_runs[False]
     assert off.lineage.where("partition_id >= 0").count() == 0
